@@ -31,8 +31,8 @@ block-compressed index:
   see the old version or the compacted one, never a partial state.
 
 Scale shape: the tombstone set is bounded by deletes-since-last-compaction
-(collected once per process per version and cached — zero extra Spark jobs
-per query after the first); compaction is one partition-parallel Arrow pass
+(read on the driver once per process per version and cached — zero Spark
+jobs, also for the first query); compaction is one partition-parallel Arrow pass
 over the encoded blocks (orders of magnitude smaller than raw postings) plus
 one anti-join over the docs table — no shuffle except the final writes'
 range partitioning.  A workload whose delete volume rivals the corpus should
@@ -51,7 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.observation import Observation
 
-from es_indexer_spark.index import catalog
+from es_indexer_spark.index import catalog, driver_read
 from es_indexer_spark.index.codec import (
     bm25_tf_factor,
     decode_block,
@@ -189,9 +189,10 @@ _TOMB_COUNT_CACHE: dict[tuple[str, str, tuple[str, ...]], int] = {}
 
 
 def tombstone_count(spark: SparkSession, vdir: str) -> int:
-    """Cheap cached tombstone-row count (parquet metadata only — an UPPER
-    bound on the distinct set when ids were re-deleted, which is the safe
-    direction for the distributed-path cutoff)."""
+    """Cheap cached tombstone-row count: the Σ of the files' footer row
+    counts, no Spark job (an UPPER bound on the distinct set when ids were
+    re-deleted, which is the safe direction for the distributed-path
+    cutoff)."""
     sig = _listing(vdir)
     if not sig:
         return 0
@@ -200,15 +201,15 @@ def tombstone_count(spark: SparkSession, vdir: str) -> int:
     if n is None:
         while len(_TOMB_COUNT_CACHE) >= _TOMB_CACHE_MAX:
             _TOMB_COUNT_CACHE.pop(next(iter(_TOMB_COUNT_CACHE)))
-        n = spark.read.parquet(_tomb_dir(vdir)).count()
+        n = driver_read.count_rows(driver_read.data_files(_tomb_dir(vdir)))
         _TOMB_COUNT_CACHE[key] = n
     return n
 
 
 def tombstone_array(spark: SparkSession, vdir: str) -> np.ndarray | None:
-    """Sorted np.int64 tombstone set for scorer-side filtering, cached per
-    (session, version, listing) — after the first call a query pays zero extra
-    Spark jobs for delete support.
+    """Sorted np.int64 tombstone set for scorer-side filtering, read on the
+    driver (single-threaded, no Spark job) and cached per (session, version,
+    listing).
 
     Scale guard: collecting a corpus-scale delete set (e.g. after
     ``delete_by_query(match_all=True)``, the reference's cleanup shape) routes
@@ -235,8 +236,11 @@ def tombstone_array(spark: SparkSession, vdir: str) -> np.ndarray | None:
             )
         while len(_TOMB_CACHE) >= _TOMB_CACHE_MAX:
             _TOMB_CACHE.pop(next(iter(_TOMB_CACHE)))
-        rows = spark.read.parquet(_tomb_dir(vdir)).select("docid").collect()
-        arr = np.unique(np.array([r["docid"] for r in rows], dtype=np.int64))
+        arr = np.unique(
+            driver_read.read_column(
+                driver_read.data_files(_tomb_dir(vdir)), "docid"
+            ).astype(np.int64)
+        )
         _TOMB_CACHE[key] = arr
     return arr
 

@@ -59,6 +59,8 @@ from es_indexer_spark.index.tombstones import live_mask
 from es_indexer_spark.query.phrase import _chain_starts, _sorted_member
 
 _SCORE_SCHEMA = "docid long, score double"
+# block columns the bool scorer reads (``poss`` too when it has phrases)
+_BLOCK_COLUMNS = ("term", "shard", "first_docid", "gaps", "tfs", "dls")
 
 
 def _bool_shard_scorer(
@@ -374,6 +376,7 @@ def _bool_shard_scorer(
         return pd.DataFrame({"docid": cand[order], "score": scores[order]})
 
     score.tomb_default = tomb
+    score.wants_positions = bool(phrase_set)
     return score
 
 
@@ -543,7 +546,8 @@ def bool_query(
     stats = catalog.read_stats(vdir)
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     k1, b = stats["k1"], stats["b"]
-    from es_indexer_spark.query.engine import _tomb_mode
+    from es_indexer_spark.query import engine
+    from es_indexer_spark.query.engine import _tomb_mode, empty_scores
 
     # past DISTRIBUTED_TOMB_THRESHOLD the delete set is shard-keyed and rides
     # the SAME cogroup as the range-filter set (kind-tagged union) — never a
@@ -749,7 +753,7 @@ def bool_query(
     s_phr = [p for p in phrase_clauses(should_phrase) if p[0]]
     if any(not p[0] for p in m_phr):
         # a must phrase that analyzes to nothing rewrites to MatchNoDocs
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
 
     def toks(qs: Sequence[str]) -> list[str]:
         out: list[str] = []
@@ -764,7 +768,7 @@ def bool_query(
     # a REQUIRED fuzzy clause whose expansion came back empty can match
     # nothing (ES: the clause query rewrites to MatchNoDocs)
     if any(not g for g in must_groups):
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
 
     phrase_t = (
         tokenize_one(filter_phrase, stats["tokenizer"], lang=lang)
@@ -897,7 +901,7 @@ def bool_query(
     extra_t = const_t or mphr_t or sphr_t or sdc
     if not (must_t or should_t or filt_t or phrase_t or not_t or extra_t):
         if rng_df is None:
-            return spark.createDataFrame([], _SCORE_SCHEMA)
+            return empty_scores(spark)
         # filter(range) with NO term clause at all: constant-score match of
         # the range scan itself — no postings needed. (A must_not alongside
         # the range falls through to the cogroup path so the exclusion
@@ -906,7 +910,7 @@ def bool_query(
         return out if k is None else out.orderBy(F.asc("docid")).limit(k)
     if not (must_t or should_t or filt_t or phrase_t or extra_t) and rng_df is None:
         # must_not alone: nothing to exclude from (documented empty result)
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
 
     all_terms = sorted(
         set(must_t) | set(should_t) | set(not_t) | set(filt_t) | set(phrase_t)
@@ -918,13 +922,13 @@ def bool_query(
     found = {r["term"]: r for r in dict_rows}
     # an absent required term / fully-absent required group -> no results
     if any(t not in found for t in filt_t + phrase_t + mphr_t):
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
     if any(all(t not in found for t in g) for g in must_groups):
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
     if any(all(t not in found for t in g) for g, _w in m_const):
         # a required constant-score group (terms / wildcard leaf) with no
         # present expansion rewrites to MatchNoDocs
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
     idfs = {
         t: weight.get(t, 1.0) * lucene_idf(n_docs, found[t]["df"])
         for t in set(must_t) | set(should_t)
@@ -963,12 +967,12 @@ def bool_query(
             minimum_should_match, n_should_clauses
         )
         if msm > n_should_clauses:
-            return spark.createDataFrame([], _SCORE_SCHEMA)
+            return empty_scores(spark)
     # load postings for every clause's present terms (must_not included — the
     # exclusion set is derived shard-locally from its postings)
     present = sorted(t for t in all_terms if t in found)
     if not present and rng_df is None and clause_df is None:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
 
     shard_k = (1 << 62) if k is None else k
     scorer = _bool_shard_scorer(
@@ -985,14 +989,6 @@ def bool_query(
         should_const=[([t for t in g if t in found], w) for g, w in s_const],
         doc_clauses=[(r, b_) for r, b_, _p in sdc],
     )
-    if present:
-        buckets = sorted({found[t]["bucket"] for t in present})
-        blocks = _load_blocks(spark, vdir, present, buckets)
-    else:
-        # every term clause was absent from the dictionary but the (required)
-        # range still defines the candidates — drive the cogroup with an
-        # empty left side so each allowed shard emits its score-0 docs
-        blocks = spark.createDataFrame([], "shard long, term string")
     # cogroup delivery: the range-filter set (kind 0) and — in distributed
     # tombstone mode — the delete set (kind 1) ride ONE kind-tagged right
     # side, so stacking both costs the same single cogroup
@@ -1007,6 +1003,23 @@ def bool_query(
         # scored doc clauses ride the same kind-tagged right side (kind 2+i)
         tagged = clause_df.select("shard", "docid", "kind")
         right = tagged if right is None else right.unionByName(tagged)
+    buckets = sorted({found[t]["bucket"] for t in present})
+    if right is None and (
+        sum(found[t]["df"] for t in present) < engine.LOCAL_MAX_POSTINGS
+    ):
+        # driver-local below the posting-volume cutover (query/engine.py):
+        # the same scorer per shard, zero Spark jobs
+        cols = _BLOCK_COLUMNS + (("poss",) if scorer.wants_positions else ())
+        return engine._local_topk(
+            spark, engine._local_blocks(vdir, present, buckets, cols), scorer, k
+        )
+    if present:
+        blocks = _load_blocks(spark, vdir, present, buckets)
+    else:
+        # every term clause was absent from the dictionary but the (required)
+        # range still defines the candidates — drive the cogroup with an
+        # empty left side so each allowed shard emits its score-0 docs
+        blocks = spark.createDataFrame([], "shard long, term string")
     if right is None:
         # single-arg wrapper: applyInPandas dispatches on arity, and the
         # scorer's optional parameters would read as (key, pdf)

@@ -387,12 +387,14 @@ def function_score_functions(
             raw_dist = F.lit(2.0 * 6371000.0) * F.asin(F.sqrt(a))
         elif isinstance(origin, str):
             # date decay (recency boosting): origin a timestamp literal,
-            # scale/offset "7d"-style durations, dist in seconds
+            # scale/offset "7d"-style durations, dist in seconds. A cast
+            # parses ISO "T" and bare-date forms, which unix_timestamp's
+            # fixed pattern rejects under ANSI
             scale = _duration_seconds(p["scale"])
             offset = _duration_seconds(p.get("offset", "0s"))
             raw_dist = F.abs(
-                F.unix_timestamp(F.col(field)).cast("double")
-                - F.unix_timestamp(F.lit(origin)).cast("double")
+                F.col(field).cast("timestamp").cast("double")
+                - F.lit(origin).cast("timestamp").cast("double")
             )
         else:
             scale = float(p["scale"])

@@ -590,9 +590,16 @@ def multi_match_phrase(
     dis-max + ``tie_breaker`` in ONE hash agg over the unioned per-field
     frames. No scan beyond the per-field phrase jobs, no driver collect;
     the per-field top sets are complete (``k=None``) so the dis-max never
-    misses a doc that ranks only in the other field."""
+    misses a doc that ranks only in the other field. ``slop`` with
+    ``prefix`` raises: the phrase-prefix engine matches exact adjacency
+    only."""
     from es_indexer_spark.query.phrase import match_phrase_prefix, phrase_match
 
+    if prefix and slop:
+        raise ValueError(
+            "multi_match type=phrase_prefix does not support slop "
+            f"(got slop={slop}); match_phrase_prefix matches adjacent terms only"
+        )
     parts = []
     for field, boost in boosts.items():
         sub = field_dir(root, field)

@@ -2,21 +2,27 @@
 
 Hypothesis draws 1–4-term disjunctive queries from a frequency-diverse
 vocabulary (stop-word-frequency tokens, mid, rare and absent) and runs the
-engine's `topk` — with the block-max probe FORCED ON for half the cases
-and off for the rest — against an independently-computed DuckDB BM25 over
+engine's `topk` on both serving paths (driver-local, and Spark with the
+cutover forced to 0) against an independently-computed DuckDB BM25 over
 the same parquet (the same independent formula the verify recipe pins for
 one fixed query). The FULL match set (k=None) must agree doc-for-doc and
-score-for-score at 6 decimals, so the dictionary lookup, the pruned
-postings scan, the per-shard numpy scorer, live-docs filtering (none
-here) and the block-max pruning all get swept at once."""
+score-for-score at 6 decimals on each path; for half the cases the Spark
+path also runs a k=5 query with the block-max probe FORCED ON (k=None
+never probes), checked tie-aware against the DuckDB top 5. So the
+dictionary lookup, the pruned postings scan, the per-shard numpy scorer,
+live-docs filtering (none here) and the block-max pruning all get swept
+at once."""
 
 from __future__ import annotations
+
+import uuid
 
 import duckdb
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from es_indexer_spark.index.builder import build_index
+from es_indexer_spark.query import engine
 from es_indexer_spark.query.engine import topk
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
@@ -75,23 +81,42 @@ QUERY = st.tuples(
 )
 
 
+def _rounded(df):
+    # the engine tie-breaks on the RAW double before rounding; compare both
+    # sides under the same (rounded score desc, docid asc) order
+    got = [(r["docid"], round(r["score"], 6)) for r in df.collect()]
+    return sorted(got, key=lambda t: (-t[1], t[0]))
+
+
 @settings(max_examples=30, deadline=None,
           suppress_health_check=list(HealthCheck))
 @given(QUERY)
 def test_topk_matches_duckdb_bm25(spark, bm_index, duck, case):
+    """Each case runs on both serving paths: driver-local (the default at
+    this corpus size) and Spark (cutover forced to 0)."""
     terms, bmax = case
-    got = [
-        (r["docid"], round(r["score"], 6))
-        for r in topk(
-            spark, bm_index, " ".join(terms), k=None,
-            use_blockmax=bmax,
-            # force the probe to actually run when on (default threshold
-            # keeps it off at this corpus size)
-            probe_min_postings=0 if bmax else (1 << 22),
-        ).collect()
-    ]
-    # the engine tie-breaks on the RAW double before rounding; compare both
-    # sides under the same (rounded score desc, docid asc) order
-    got.sort(key=lambda t: (-t[1], t[0]))
+    q = " ".join(terms)
     want = [(d, s) for d, s in _duck_scores(duck, terms)]
-    assert got == want
+    assert _rounded(topk(spark, bm_index, q, k=None, use_blockmax=bmax)) == want
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
+        assert _rounded(
+            topk(spark, bm_index, q, k=None, use_blockmax=bmax)
+        ) == want
+        if bmax and want:
+            # force the probe to actually run (the default threshold keeps
+            # it off at this corpus size; k=None disables it): it is the
+            # only part of topk that launches jobs before the collect
+            k = 5
+            sc = spark.sparkContext
+            group = f"bm25fuzz-probe-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, "block-max probe")
+            try:
+                df = topk(spark, bm_index, q, k=k, probe_min_postings=0)
+                assert sc.statusTracker().getJobIdsForGroup(group)
+            finally:
+                sc.setJobGroup("", "")
+            got = _rounded(df)
+            # tie-aware top-k: the same score sequence, every hit a true match
+            assert [s for _, s in got] == [s for _, s in want[:k]]
+            assert set(got) <= set(want)

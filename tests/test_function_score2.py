@@ -197,21 +197,23 @@ def test_date_decay_recency(spark, documents, tmp_path_factory):
         for r in spark.read.parquet(catalog.resolve(root) + "/docs")
         .select("docid", "ts").collect()
     }
-    got = [
-        (r["docid"], r["score"])
-        for r in function_score_functions(
-            spark, root, Q,
-            [{"gauss": {"ts": {"origin": "2024-01-15 00:00:00",
-                               "scale": "7d", "offset": "1d"}}}],
-        ).collect()
-    ]
     origin = dt.datetime(2024, 1, 15)
     want = _rank({
         d: s * _gauss(abs((tss[d] - origin).total_seconds()), 0.0,
                       7 * 86400.0, offset=86400.0)
         for d, s in base.items()
     })
-    assert got == [(d, pytest.approx(s)) for d, s in want]
+    # the origin parses in the space, ISO "T" and bare-date forms alike
+    for o in ("2024-01-15 00:00:00", "2024-01-15T00:00:00", "2024-01-15"):
+        got = [
+            (r["docid"], r["score"])
+            for r in function_score_functions(
+                spark, root, Q,
+                [{"gauss": {"ts": {"origin": o,
+                                   "scale": "7d", "offset": "1d"}}}],
+            ).collect()
+        ]
+        assert got == [(d, pytest.approx(s)) for d, s in want], o
 
 
 def test_geo_decay_haversine(spark, documents, tmp_path_factory):

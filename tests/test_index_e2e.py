@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from es_indexer_spark.index import catalog
 from es_indexer_spark.index.builder import build_index
+from es_indexer_spark.query import engine
 from es_indexer_spark.query.bm25 import bm25_topk_brute
 from es_indexer_spark.query.engine import fetch_docs, topk
 
@@ -46,9 +47,16 @@ def index_root(spark, documents, tmp_path_factory):
 
 @pytest.mark.parametrize("query", QUERIES)
 @pytest.mark.parametrize("use_blockmax", [True, False])
-def test_rank_identical_vs_oracle(spark, documents, index_root, query, use_blockmax):
+def test_rank_identical_vs_oracle(
+    spark, documents, index_root, query, use_blockmax, monkeypatch
+):
     # probe_min_postings=0 forces the block-max probe path even on this tiny
-    # corpus (the df-based fast path would otherwise skip it)
+    # corpus (the df-based fast path would otherwise skip it); the probe
+    # lives on the Spark path, which this tiny corpus only takes with the
+    # driver-local cutover at 0. Without block-max, the default local path
+    # is checked against the oracle.
+    if use_blockmax:
+        monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
     got = topk(
         spark, index_root, query, k=10,
         use_blockmax=use_blockmax, probe_min_postings=0,
@@ -61,7 +69,9 @@ def test_rank_identical_vs_oracle(spark, documents, index_root, query, use_block
         assert g["score"] == pytest.approx(w["score"], rel=1e-9)
 
 
-def test_hot_term_df_salting_no_straggler(spark, documents, tmp_path_factory):
+def test_hot_term_df_salting_no_straggler(
+    spark, documents, tmp_path_factory, monkeypatch
+):
     """north_rule 'salt ∝ df': a term present in 100% of docs must be split
     across multiple raw slices (no single encode task owns it), and the
     resulting index must stay rank-identical to the brute oracle — including
@@ -102,7 +112,9 @@ def test_hot_term_df_salting_no_straggler(spark, documents, tmp_path_factory):
         .count()
     )
     assert n_files >= 2
-    # correctness across fragmented/salted block sequences
+    # correctness across fragmented/salted block sequences, with the
+    # block-max probe on the Spark path
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
     for query in ("omnipresent", "omnipresent spark join"):
         got = topk(spark, root, query, k=10, probe_min_postings=0).collect()
         want = bm25_topk_brute(
@@ -405,7 +417,9 @@ def test_assign_docids_unique_at_scale(spark):
     assert keys == sorted(keys)
 
 
-def test_blockmax_rank_safe_with_duplicate_user_ids(spark, documents, tmp_path_factory):
+def test_blockmax_rank_safe_with_duplicate_user_ids(
+    spark, documents, tmp_path_factory, monkeypatch
+):
     """A user-supplied id_col may legitimately repeat (two versions of a
     path): the same docid then carries postings for the same term in several
     blocks, and the classic one-block-per-(doc,term) block-max bound is
@@ -421,6 +435,8 @@ def test_blockmax_rank_safe_with_duplicate_user_ids(spark, documents, tmp_path_f
         shard_size=10,  # many shards -> real probe/theta pruning
         n_ckpt_batches=2,
     )
+    # both sides on the Spark path, where the probe lives
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
     for q in ("spark join window", "the", "customer batch stream data"):
         on = topk(spark, root, q, k=10, use_blockmax=True, probe_min_postings=0).collect()
         off = topk(spark, root, q, k=10, use_blockmax=False).collect()

@@ -344,6 +344,19 @@ def test_multi_match_phrase_prefix_and_single_field(spark, multi_index_pos):
         ).collect()
     ]
     assert got == want and got
+    # the phrase-prefix engine has no slop: asking for one raises by name,
+    # directly and through the DSL, instead of being dropped
+    from es_indexer_spark.query.dsl import search
+
+    with pytest.raises(ValueError, match="slop"):
+        multi_match_phrase(
+            spark, multi_index_pos, "data str", boosts={"text": 1.0},
+            k=10, prefix=True, slop=1,
+        )
+    with pytest.raises(ValueError, match="slop"):
+        search(spark, multi_index_pos, {"query": {"multi_match": {
+            "query": "data str", "type": "phrase_prefix",
+            "fields": ["text"], "slop": 2}}})
 
 
 def test_multi_match_phrase_dsl_dispatch(spark, multi_index_pos):

@@ -66,8 +66,48 @@ def test_delete_hides_doc_and_keeps_scores(spark, deleted_index):
     assert all(d not in {r["docid"] for r in after} for d in dead)
 
 
-def test_delete_blockmax_rank_safe(spark, deleted_index):
+def test_local_and_spark_paths_identical_with_tombstones(
+    spark, deleted_index, monkeypatch
+):
+    """The driver-local path (default at this size) and the Spark path
+    (cutover forced to 0) filter the same driver tombstone array: identical
+    ranks and bit-identical scores for k, the search_after cursor, k=None
+    and a bool query."""
+    from es_indexer_spark.query import engine
+    from es_indexer_spark.query.boolean import bool_query
+
+    root, _, dead = deleted_index
+
+    def runs():
+        p1 = topk(spark, root, QUERY, k=5).collect()
+        cur = (p1[-1]["score"], p1[-1]["docid"])
+        return [
+            [(r["docid"], r["score"]) for r in rows]
+            for rows in (
+                p1,
+                topk(spark, root, QUERY, k=5, after=cur).collect(),
+                topk(spark, root, QUERY, k=None).collect(),
+                bool_query(spark, root, must=["data"],
+                           should=["stream"], k=None).collect(),
+            )
+        ]
+
+    local = runs()
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
+    on_spark = runs()
+    # Spark's bool k=None has no global order; the local one is ranked
+    on_spark[3].sort(key=lambda t: (-t[1], t[0]))
+    assert local == on_spark
+    assert all(rows for rows in local)
+    assert not {d for rows in local for d, _ in rows} & dead
+
+
+def test_delete_blockmax_rank_safe(spark, deleted_index, monkeypatch):
+    from es_indexer_spark.query import engine
+
     root, _, _ = deleted_index
+    # the block-max probe lives on the Spark path
+    monkeypatch.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
     bm = topk(spark, root, QUERY, k=10, use_blockmax=True,
               probe_min_postings=0).collect()
     exact = topk(spark, root, QUERY, k=10, use_blockmax=False).collect()

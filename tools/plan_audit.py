@@ -13,7 +13,7 @@ from __future__ import annotations
 import io
 import os
 import sys
-from contextlib import redirect_stdout
+from contextlib import contextmanager, redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -23,6 +23,22 @@ def formatted(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+@contextmanager
+def spark_path():
+    """Keep the ranked queries built inside on the Spark path: the engine's
+    driver-local cutover is 0 (no query is small enough), then restored.
+    Sections auditing Spark plans of queries the sf0.001 index would serve
+    on the driver build them inside this."""
+    from es_indexer_spark.query import engine
+
+    saved = engine.LOCAL_MAX_POSTINGS
+    engine.LOCAL_MAX_POSTINGS = 0
+    try:
+        yield
+    finally:
+        engine.LOCAL_MAX_POSTINGS = saved
 
 
 def main() -> int:
@@ -230,9 +246,10 @@ def main() -> int:
     # postings scan -> single shard-grouped Arrow stage -> global top-k
     from es_indexer_spark.query.boolean import bool_query
 
-    p = formatted(bool_query(
-        spark, root, must=["data"], should=["stream"], must_not=["key"], k=10
-    ))
+    with spark_path():
+        p = formatted(bool_query(
+            spark, root, must=["data"], should=["stream"], must_not=["key"], k=10
+        ))
     sections.append((
         "bool_query (must/should/must_not, one shuffle, one Arrow stage)",
         p,
@@ -242,6 +259,26 @@ def main() -> int:
             ("single shard shuffle", len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1),
             ("single Arrow stage", len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", p, re.M)) == 1),
             ("top-k merge, no global sort", "TakeOrderedAndProject" in p),
+        ],
+    ))
+
+    # 12b. below the engine's posting-volume cutover the same ranked and
+    # bool queries are served on the driver: each result is a local
+    # relation, with no scan, shuffle or Arrow stage left for Spark to run
+    from es_indexer_spark.query.engine import topk as _topk_local
+
+    p = formatted(_topk_local(spark, root, "spark join window", k=10)) + formatted(
+        bool_query(spark, root, must=["data"], should=["stream"],
+                   must_not=["key"], k=10)
+    )
+    sections.append((
+        "topk + bool_query below the posting-volume cutover: driver-local LocalTableScan",
+        p,
+        [
+            ("both are local relations", p.count("LocalTableScan") >= 2),
+            ("no shuffle", "Exchange" not in p),
+            ("no Arrow stage", "FlatMapGroupsInPandas" not in p),
+            ("no parquet scan", "Scan parquet" not in p),
         ],
     ))
 
@@ -848,19 +885,22 @@ def main() -> int:
 
     # 35. round 5h: composed nested bool — leaves stay term-pruned one-scan
     # bool plans; each level adds ONE hash agg (reqc/shc/score) and must_not
-    # ONE anti-join; no cartesian anywhere
+    # ONE anti-join; no cartesian anywhere. The must_not leg names a term
+    # present in the dictionary: a leg over an absent term is an empty
+    # relation, and the optimizer rightly drops its anti-join
     from es_indexer_spark.query.composebool import compose_bool
 
-    p = formatted(compose_bool(spark, root, {
-        "must": [
-            {"bool": {"should": [{"match": {"content": "data"}},
-                                 {"match": {"content": "stream"}}],
-                      "minimum_should_match": 2}},
-            {"match": {"content": "customer"}},
-        ],
-        "must_not": [{"bool": {"filter": [{"match": {"content": "error"}},
-                                          {"term": {"lang": "en"}}]}}],
-    }, k=10))
+    with spark_path():
+        p = formatted(compose_bool(spark, root, {
+            "must": [
+                {"bool": {"should": [{"match": {"content": "data"}},
+                                     {"match": {"content": "stream"}}],
+                          "minimum_should_match": 2}},
+                {"match": {"content": "customer"}},
+            ],
+            "must_not": [{"bool": {"filter": [{"match": {"content": "key"}},
+                                              {"term": {"lang": "en"}}]}}],
+        }, k=10))
     sections.append((
         "composed nested bool: per-level hash agg + anti-join, pruned leaves",
         p,
