@@ -502,6 +502,9 @@ def _build_index_inner(
         tstats = ts_udf(F.col(content_col), lang)
     else:
         tstats = ts_udf(F.col(content_col))
+    # the column the code chain's ``lang:<lang>`` marker came from, so that
+    # writes into this index (``_bulk``) tag their documents the same way
+    lang_stat = {"lang_col": lang_col} if tokenizer == "code" and lang_col else {}
 
     # docids first (cheap columns only through the range shuffle), tokenize after;
     # persist so docs + raw stages tokenize once.
@@ -584,7 +587,7 @@ def _build_index_inner(
                 "n_docs": 0, "avgdl": avgdl, "k1": k1, "b": b,
                 "tokenizer": tokenizer, "n_buckets": n_buckets,
                 "shard_size": shard_size, "block_size": block_size,
-                "positions": store_positions,
+                "positions": store_positions, **lang_stat,
             },
         )
         catalog.ckpt_write(
@@ -758,6 +761,7 @@ def _build_index_inner(
             "shard_size": shard_size,
             "block_size": block_size,
             "positions": store_positions,
+            **lang_stat,
         },
     )
 

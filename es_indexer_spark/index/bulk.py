@@ -3,11 +3,24 @@ path: ``IndexServiceImpl.java:74-91,153-156`` accumulates documents into
 5 MiB bulk requests and flushes them with idempotent ``_id`` keys; the
 retry/backoff loop (:153-172) makes re-sending a batch safe. This module is
 the ES-API-compatible adapter over the same machinery this engine already
-has: ``index``/``create`` actions become ONE delta build merged by
-``_id``-keyed :func:`~es_indexer_spark.index.merge.upsert_batch`;
-``delete`` actions become tombstones; the whole call publishes exactly one
-new version atomically (re-running the same bulk is idempotent at the
-tombstone level, the reference's retry contract).
+has: ``index``/``create`` actions become ONE delta merged by ``_id`` the way
+:func:`~es_indexer_spark.index.merge.upsert_batch` merges (superseded live
+copies tombstoned); ``delete`` actions become tombstones in the same new
+version; the whole call publishes exactly one new version atomically
+(re-running the same bulk is idempotent at the tombstone level, the
+reference's retry contract). A delete-only bulk appends one tombstone file
+to the published version instead.
+
+Two execution paths, one result:
+
+- **driver** (:mod:`~es_indexer_spark.index.driver_write`): below its
+  payload and main-postings-bytes cutovers the delta is tokenized and
+  encoded, merged and written on the driver with pyarrow — no Spark job;
+- **Spark**: above them, a delta ``build_index`` then ``upsert_batch``
+  with the deletes passed along.
+
+Both tokenize with the index's own ``block_size`` and, for the ``code``
+chain, its ``lang_col`` (recorded in ``stats.json`` by ``build_index``).
 
 Deliberate divergences (README):
 
@@ -15,8 +28,8 @@ Deliberate divergences (README):
   doc with the stored ``_source``; this engine does not store source text —
   the same reason ``_update_by_query`` reads the corpus), so a partial
   ``update`` without the content column is an error ITEM, not a merge;
-- the 5 MiB transport cap is meaningless for an in-process DataFrame write;
-  it is reported as ``n_reference_batches`` (how many HTTP requests the
+- the 5 MiB transport cap is meaningless for an in-process write; it is
+  reported as ``n_reference_batches`` (how many HTTP requests the
   reference would have sent) for observability parity, not enforced.
 
 Per-action error isolation follows the reference's bulk-error reduction
@@ -24,25 +37,28 @@ Per-action error isolation follows the reference's bulk-error reduction
 lands — never an all-or-nothing abort.
 
 Scale note: ``_bulk`` is a REQUEST-sized surface (the reference caps it at
-5 MiB); actions parse on the driver and land as one delta build. Corpus-
-scale ingest goes straight to ``build_index`` / ``upsert_batch`` on a
-DataFrame — this adapter exists so ES clients' write calls port verbatim.
+5 MiB); actions parse on the driver. Corpus-scale ingest goes straight to
+``build_index`` / ``upsert_batch`` on a DataFrame — this adapter exists so
+ES clients' write calls port verbatim.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import tempfile
 import time
 from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession, functions as F
 
-from es_indexer_spark.index import catalog
+from es_indexer_spark.index import catalog, driver_read, driver_write
 from es_indexer_spark.index.builder import build_index
+from es_indexer_spark.index.codec import BLOCK_SIZE
 from es_indexer_spark.index.merge import upsert_batch
-from es_indexer_spark.index.tombstones import delete_docs
+from es_indexer_spark.index.tombstones import append_to_vdir
 
 _OPS = ("index", "create", "delete", "update")
 _REFERENCE_BATCH_BYTES = 5 << 20  # IndexServiceImpl.getBatchSize
@@ -143,51 +159,41 @@ def bulk(
     deletes = sorted(final_delete)
 
     version_dir = None
-    if upserts:
+    if upserts or deletes:
         main_vdir = catalog.resolve(index_root)
         stats = catalog.read_stats(main_vdir)
-        cols = [id_col, content_col, *[c for c in meta_cols if c != id_col]]
-        rows = [tuple(d.get(c) for c in cols) for d in upserts]
-        delta_df = spark.createDataFrame(rows, cols)
-        main_doc_cols = spark.read.parquet(
-            catalog.resolve(index_root) + "/docs"
-        ).columns
+        main_doc_cols = pq.read_schema(
+            driver_read.data_files(os.path.join(main_vdir, "docs"))[0]
+        ).names
         keyed = id_col in main_doc_cols and id_col in meta_cols
-        delta_root = work_dir or tempfile.mkdtemp(prefix="bulk_delta_")
-        try:
-            build_index(
-                spark, delta_df, delta_root,
+        # deletes key on the EXTERNAL id when the docs table stores it
+        delete_key = id_col if id_col in main_doc_cols else "docid"
+        lang_col = stats.get("lang_col")
+        doc_cols = ["docid", "doc_len", "sha256",
+                    *[c for c in meta_cols if c != "docid"]]
+        served = False
+        if driver_write.serves(main_vdir, stats, payload_bytes, doc_cols,
+                               delete_key):
+            if upserts:
+                version_dir = driver_write.bulk_write(
+                    spark, index_root, main_vdir, upserts, deletes,
+                    content_col=content_col, id_col=id_col,
+                    clash_key=id_col if keyed else "docid",
+                    delete_key=delete_key, lang_col=lang_col,
+                    publish_meta=_publish_meta(len(upserts), len(deletes)),
+                )
+                served = version_dir is not None
+            else:
+                append_to_vdir(spark, main_vdir, driver_write.delete_ids(
+                    main_vdir, delete_key, deletes))
+                served = True
+        if not served:
+            version_dir = _spark_bulk(
+                spark, index_root, main_vdir, stats, upserts, deletes,
                 content_col=content_col, id_col=id_col, meta_cols=meta_cols,
-                tokenizer=stats.get("tokenizer", "standard"),
-                k1=stats.get("k1", 1.2), b=stats.get("b", 0.75),
-                n_buckets=stats.get("n_buckets", 32),
-                shard_size=stats.get("shard_size", 1 << 16),
-                store_positions=stats.get("positions", False),
-                resume=False,
+                keyed=keyed, delete_key=delete_key, lang_col=lang_col,
+                work_dir=work_dir,
             )
-            version_dir = upsert_batch(
-                spark, index_root, delta_root,
-                key_cols=(id_col,) if keyed else ("docid",),
-                publish_meta={"op": "bulk", "indexed": len(upserts),
-                              "deleted": len(deletes)},
-            )
-        finally:
-            if work_dir is None:
-                shutil.rmtree(delta_root, ignore_errors=True)
-    if deletes:
-        # deletes key on the EXTERNAL id: map through the (post-upsert)
-        # docs table, since upserted replacements carry remapped docids
-        import os
-
-        from pyspark.sql import functions as F
-
-        vdir = catalog.resolve(index_root)
-        docs = spark.read.parquet(os.path.join(vdir, "docs"))
-        key = F.col(id_col) if id_col in docs.columns else F.col("docid")
-        delete_docs(
-            spark, index_root,
-            docs.filter(key.isin(deletes)).select("docid"),
-        )
     return {
         "took_sec": round(time.time() - t0, 3),
         "errors": any(r["status"] == "error" for r in results),
@@ -197,3 +203,63 @@ def bulk(
         ) if upserts else 0,
         "version_dir": version_dir,
     }
+
+
+def _publish_meta(n_indexed: int, n_deleted: int) -> dict:
+    return {"op": "bulk", "indexed": n_indexed, "deleted": n_deleted}
+
+
+def _spark_bulk(
+    spark: SparkSession,
+    index_root: str,
+    main_vdir: str,
+    stats: dict,
+    upserts: list[dict],
+    deletes: list[int],
+    *,
+    content_col: str,
+    id_col: str,
+    meta_cols: Sequence[str],
+    keyed: bool,
+    delete_key: str,
+    lang_col: str | None,
+    work_dir: str | None,
+) -> str | None:
+    """The bulk as Spark jobs: a delta ``build_index`` merged by
+    :func:`upsert_batch`, the deletes tombstoned into the merged version
+    (or, with no upserts, appended to the published one)."""
+    main_docs = spark.read.parquet(os.path.join(main_vdir, "docs"))
+    deleted = (
+        main_docs.filter(F.col(delete_key).isin(deletes)).select("docid")
+        if deletes else None
+    )
+    if not upserts:
+        append_to_vdir(spark, main_vdir, deleted)
+        return None
+    cols = [id_col, content_col, *[c for c in meta_cols if c != id_col]]
+    if lang_col and lang_col not in cols:
+        cols.append(lang_col)  # tokenizer input only, not stored
+    rows = [tuple(d.get(c) for c in cols) for d in upserts]
+    delta_df = spark.createDataFrame(rows, cols)
+    delta_root = work_dir or tempfile.mkdtemp(prefix="bulk_delta_")
+    try:
+        build_index(
+            spark, delta_df, delta_root,
+            content_col=content_col, id_col=id_col, meta_cols=meta_cols,
+            tokenizer=stats.get("tokenizer", "standard"), lang_col=lang_col,
+            k1=stats.get("k1", 1.2), b=stats.get("b", 0.75),
+            n_buckets=stats.get("n_buckets", 32),
+            shard_size=stats.get("shard_size", 1 << 16),
+            block_size=stats.get("block_size", BLOCK_SIZE),
+            store_positions=stats.get("positions", False),
+            resume=False,
+        )
+        return upsert_batch(
+            spark, index_root, delta_root,
+            key_cols=(id_col,) if keyed else ("docid",),
+            publish_meta=_publish_meta(len(upserts), len(deletes)),
+            delete_docids=deleted,
+        )
+    finally:
+        if work_dir is None:
+            shutil.rmtree(delta_root, ignore_errors=True)

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -74,6 +75,7 @@ def merge_indexes(
     publish_meta: dict | None = None,
     reject_duplicate_shas: bool = False,
     tombstone_docids: DataFrame | None = None,
+    delete_docids: DataFrame | None = None,
 ) -> str:
     """Merge the published versions of ``main_root`` and ``delta_root`` into a
     new version of ``out_root`` (default: ``main_root``), publish atomically,
@@ -94,6 +96,10 @@ def merge_indexes(
     Segments must share the index layout (n_buckets, shard_size, block_size,
     tokenizer, k1, b, positions) — enforced, since bucket assignment and
     shard-locality are layout-derived.
+
+    ``tombstone_docids`` (superseded copies) and ``delete_docids`` (deletes
+    that ride along, as in a ``_bulk``) are main-coordinate docids
+    tombstoned into the merged version before it is published.
     """
     out_root = out_root or main_root
     mdir = catalog.resolve(main_root)
@@ -185,11 +191,16 @@ def merge_indexes(
     # upsert support: main-coordinate docids tombstoned INTO the merged
     # version only — the published main version stays untouched, so the old
     # copy disappears and its replacement appears in ONE CURRENT swap
-    upserted = 0
-    if tombstone_docids is not None:
-        upserted = tombstone_docids.count()
-        if upserted:
-            _tombstones.append_to_vdir(spark, vdir, tombstone_docids)
+    upserted = tombstone_docids.count() if tombstone_docids is not None else 0
+    deleted = delete_docids.count() if delete_docids is not None else 0
+    new_tombs = [t for t, n in ((tombstone_docids, upserted),
+                                (delete_docids, deleted)) if n]
+    if new_tombs:
+        _tombstones.append_to_vdir(
+            spark, vdir,
+            new_tombs[0] if len(new_tombs) == 1
+            else new_tombs[0].unionByName(new_tombs[1]),
+        )
 
     catalog.write_stats(
         vdir,
@@ -205,12 +216,14 @@ def merge_indexes(
         "merge",
         {
             "stage": "merge",
+            "path": "spark",
             "main": mdir,
             "delta": ddir,
             "docid_offset": offset,
             "n_docs": merged_n,
             "carried_tombstones": carried,
             "upserted_docs": upserted,
+            "deleted_docs": deleted,
             "elapsed_sec": round(time.time() - t0, 3),
         },
     )
@@ -229,6 +242,7 @@ def upsert_batch(
     key_cols: Sequence[str] = ("docid",),
     out_root: str | None = None,
     publish_meta: dict | None = None,
+    delete_docids: DataFrame | None = None,
 ) -> str:
     """The reference's ``_id``-keyed upsert semantics
     (IndexerMetadataServiceImpl.java:430-435: ``_id = uuid`` makes re-index an
@@ -245,7 +259,8 @@ def upsert_batch(
     ``("docid",)`` works for id_col-built indexes on the FIRST upsert only
     (replacements get remapped docids); pipelines that upsert repeatedly
     should carry the external id as a meta column (``meta_cols=("doc_id",)``)
-    and key on that."""
+    and key on that. ``delete_docids`` are passed through to
+    :func:`merge_indexes`."""
     from es_indexer_spark.index import tombstones as _tombstones
 
     mdir = catalog.resolve(main_root)
@@ -269,4 +284,5 @@ def upsert_batch(
         out_root=out_root,
         publish_meta=publish_meta,
         tombstone_docids=clash,
+        delete_docids=delete_docids,
     )

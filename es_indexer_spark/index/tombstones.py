@@ -43,11 +43,14 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 from collections.abc import Sequence
 from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.observation import Observation
 
@@ -86,14 +89,25 @@ def append_to_vdir(
 ) -> None:
     """Append tombstones directly under a version dir (used by the merge-time
     upsert path, which tombstones into the NOT-YET-PUBLISHED merged version so
-    replacement is atomic at the CURRENT swap)."""
+    replacement is atomic at the CURRENT swap).
+
+    A DataFrame is a Spark append write. A docid sequence is one parquet file
+    written on the driver under a hidden name and renamed into place, so a
+    concurrent reader's listing sees all of it or none of it."""
     if isinstance(docids, DataFrame):
-        df = docids.select(F.col("docid").cast("long"))
-    else:
-        df = spark.createDataFrame(
-            [(int(d),) for d in docids], "docid long"
-        ).coalesce(1)
-    df.write.mode("append").parquet(_tomb_dir(vdir))
+        docids.select(F.col("docid").cast("long")).write.mode("append").parquet(
+            _tomb_dir(vdir)
+        )
+        return
+    ids = np.asarray(docids, dtype=np.int64)
+    if ids.size == 0:
+        return
+    d = _tomb_dir(vdir)
+    os.makedirs(d, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(pa.table({"docid": ids}), tmp, store_schema=False)
+    os.replace(tmp, os.path.join(d, name))
 
 
 def delete_docs(

@@ -19,6 +19,10 @@ and checks the engine's durable invariants after every history:
 4. **compaction equivalence** — after ``compact_index`` the ranked scores
    are identical to a from-scratch build of the surviving corpus.
 
+Each bulk call draws its write path: driver-local (``index/driver_write``)
+or Spark (the payload cutover forced to 0), so mixed histories also check
+that either path reads and extends the other's output.
+
 The fixed-scenario versions of 3 and 4 live in tests/test_tombstones.py /
 test_bulk.py; this module generalizes them across random histories (the
 reference has no randomized tests — SURVEY.md §5)."""
@@ -30,7 +34,7 @@ import hashlib
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
-from es_indexer_spark.index import catalog
+from es_indexer_spark.index import catalog, driver_write
 from es_indexer_spark.index.builder import build_index
 from es_indexer_spark.index.bulk import bulk
 from es_indexer_spark.index.tombstones import compact_index
@@ -46,7 +50,8 @@ ACTION = st.one_of(
 )
 HISTORY = st.tuples(
     st.dictionaries(IDS, TEXT, min_size=8, max_size=16),   # initial corpus
-    st.lists(st.lists(ACTION, min_size=1, max_size=5),     # bulk calls
+    st.lists(st.tuples(st.lists(ACTION, min_size=1, max_size=5),  # bulk calls
+                       st.booleans()),                      # on Spark?
              min_size=1, max_size=2),
 )
 
@@ -86,7 +91,8 @@ def _live_shas(spark, root) -> dict[int, str]:
     }
 
 
-def _apply(spark, root, actions, truth: dict[int, str]) -> None:
+def _apply(spark, root, call, truth: dict[int, str]) -> None:
+    actions, on_spark = call
     blk = []
     for op, i, txt in actions:
         if op == "index":
@@ -95,8 +101,11 @@ def _apply(spark, root, actions, truth: dict[int, str]) -> None:
         else:
             blk.append({"op": "delete", "_id": i})
             truth.pop(i, None)
-    res = bulk(spark, root, blk, content_col="text", id_col="doc_id",
-               meta_cols=("doc_id",))
+    with pytest.MonkeyPatch.context() as mp:
+        if on_spark:
+            mp.setattr(driver_write, "MAX_PAYLOAD_BYTES", 0)
+        res = bulk(spark, root, blk, content_col="text", id_col="doc_id",
+                   meta_cols=("doc_id",))
     assert not res["errors"]
 
 
@@ -109,8 +118,8 @@ def test_bulk_lifecycle_invariants(spark, tmp_path_factory, history):
     root = str(base / "idx")
     _build(spark, root, init)
     truth = dict(init)
-    for actions in calls:
-        _apply(spark, root, actions, truth)
+    for call in calls:
+        _apply(spark, root, call, truth)
 
     # 1. membership: every-term probe matches exactly the live truth set
     all_terms = " ".join(VOCAB)
