@@ -108,11 +108,10 @@ def main() -> None:
     # way an ES index open does. Query latency below measures the serving
     # steady state (repeated queries against an open index), not the one-off
     # dictionary load; the load itself is visible in build_index's output.
-    from es_indexer_spark.index import catalog
-    from es_indexer_spark.query.engine import _dict_df
+    from es_indexer_spark.index.reader import open_index
 
-    _dict_df(spark, catalog.resolve(idx_root)).count()
-    _dict_df(spark, catalog.resolve(os.path.join(work, "warm"))).count()
+    open_index(spark, idx_root).dict_df().count()
+    open_index(spark, os.path.join(work, "warm")).dict_df().count()
 
     # ---- query latency through the block-max engine -------------------------------
     for name, q in [
@@ -170,7 +169,7 @@ def main() -> None:
     # q_seq15_cold: first run of the 15 queries — every query pays its
     # dictionary point-lookup job (comparable with r02/r03 'q_seq15').
     # q_seq15: the same loop re-run — the serving steady state, where the
-    # per-session term memo (_dict_lookup, the Lucene in-memory FST analog)
+    # per-session term memo (the index reader's lookup, the Lucene in-memory FST analog)
     # absorbs the dictionary job and each query is a single scan+score job
     # (VERDICT r3 #8).
     timed(

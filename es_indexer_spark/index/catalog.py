@@ -100,8 +100,8 @@ def delete_index(root: str) -> None:
     Spark queries that already planned against the old files may fail on
     re-read (path-based lazy reads — not the POSIX-fd guarantee). A rebuild
     at the same root reuses version names (v1, ...), which is safe for the
-    engine's per-version caches because they key on the dict directory's
-    mtime as well as its path (query/engine.py _dict_df)."""
+    index reader's per-version state because it keys on the dict directory's
+    mtime as well as its path (index/reader.py)."""
     import shutil
 
     if os.path.isdir(root):

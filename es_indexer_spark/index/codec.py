@@ -121,16 +121,26 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
     return cs - np.maximum.accumulate(correction)
 
 
+def bm25(idf, tf, dl, avgdl: float, k1: float, b: float):
+    """The BM25 term contribution ``idf * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))``
+    — the one saturation formula every scorer, bound and explanation uses.
+
+    Lucene/ES BM25 (public formula; ES defaults k1=1.2, b=0.75 — the reference never
+    overrides `similarity`, so this is its scoring function; SURVEY.md §1.3).
+    Duck-typed: the same expression serves float64 numpy arrays, floats and
+    Spark Columns, in one operation order, so every form agrees to the bit.
+    ``idf=1.0`` gives the idf-free tf factor (``1.0 * x == x``); ``idf=1.0,
+    dl=0.0`` the dl-independent supremum ``tf*(k1+1) / (tf + k1*(1-b))`` that
+    bounds the factor for any avgdl (``(1-b) + 0.0 == 1-b``)."""
+    return idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
 def bm25_tf_factor(
     tfs: np.ndarray, dls: np.ndarray, avgdl: float, k1: float, b: float
 ) -> np.ndarray:
-    """Idf-free BM25 term factor: tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl)).
-
-    Lucene/ES BM25 (public formula; ES defaults k1=1.2, b=0.75 — the reference never
-    overrides `similarity`, so this is its scoring function; SURVEY.md §1.3)."""
-    tf = tfs.astype(np.float64)
-    dl = dls.astype(np.float64)
-    return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+    """Idf-free BM25 term factor of integer tf/dl arrays (:func:`bm25` with
+    ``idf=1.0``)."""
+    return bm25(1.0, tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b)
 
 
 def encode_blocks(

@@ -51,7 +51,7 @@ from es_indexer_spark.analysis.tokenizer import (
 )
 from es_indexer_spark.index import catalog, driver_read, tombstones
 from es_indexer_spark.index.builder import BLOCK_SCHEMA, _make_encoder
-from es_indexer_spark.index.codec import BLOCK_SIZE
+from es_indexer_spark.index.codec import BLOCK_SIZE, bm25
 
 # Upserted content bytes served on the driver. Measured (4-vCPU VM, local[4],
 # code_files content into a 1,000-file index, whole bulk call): driver
@@ -226,9 +226,9 @@ def _write_split(table: pa.Table, out_dir: str, n_parts: int, template: str) -> 
 
 
 def _safe_bound(max_tf: pa.Array, k1: float, b: float) -> np.ndarray:
-    # merge._safe_bound, same operation order
+    # the dl-independent bound merge.py writes, from the same kernel
     mt = max_tf.to_numpy(zero_copy_only=False).astype(np.float64)
-    return mt * (k1 + 1.0) / (mt + k1 * (1.0 - b))
+    return bm25(1.0, mt, 0.0, 1.0, k1, b)
 
 
 # ---- delta ------------------------------------------------------------------------

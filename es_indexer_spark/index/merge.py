@@ -36,13 +36,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from es_indexer_spark.index import catalog
-
-
-def _safe_bound(k1: float, b: float):
-    # dl-independent BM25 tf-factor supremum per block (valid for any avgdl)
-    return (F.col("max_tf").cast("double") * (k1 + 1.0)) / (
-        F.col("max_tf").cast("double") + k1 * (1.0 - b)
-    )
+from es_indexer_spark.index.codec import bm25
 
 
 def _segment_blocks(
@@ -57,7 +51,10 @@ def _segment_blocks(
 ) -> DataFrame:
     blk = spark.read.parquet(os.path.join(vdir, "postings"))
     if merged_avgdl > seg_avgdl:
-        blk = blk.withColumn("max_score_free", _safe_bound(k1, b))
+        # dl-independent BM25 tf-factor supremum per block (any avgdl)
+        blk = blk.withColumn("max_score_free", bm25(
+            1.0, F.col("max_tf").cast("double"), 0.0, 1.0, k1, b
+        ))
     if docid_offset:
         blk = (
             blk.withColumn("first_docid", F.col("first_docid") + docid_offset)

@@ -54,7 +54,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.observation import Observation
 
-from es_indexer_spark.index import catalog, driver_read
+from es_indexer_spark.index import catalog, reader
 from es_indexer_spark.index.codec import (
     bm25_tf_factor,
     decode_block,
@@ -63,26 +63,6 @@ from es_indexer_spark.index.codec import (
     encode_positions,
     encode_varints,
 )
-
-_TOMB_DIRNAME = "_tombstones"
-
-# (applicationId, vdir, file-listing signature) -> sorted np.int64 docid array.
-# The listing signature changes on every append, so a stale entry can never be
-# served; bounded like the engine's dict cache.
-_TOMB_CACHE: dict[tuple[str, str, tuple[str, ...]], np.ndarray] = {}
-_TOMB_CACHE_MAX = 8
-
-
-def _tomb_dir(vdir: str) -> str:
-    return os.path.join(vdir, _TOMB_DIRNAME)
-
-
-def _listing(vdir: str) -> tuple[str, ...]:
-    d = _tomb_dir(vdir)
-    if not os.path.isdir(d):
-        return ()
-    return tuple(sorted(f for f in os.listdir(d) if f.endswith(".parquet")))
-
 
 def append_to_vdir(
     spark: SparkSession, vdir: str, docids: Sequence[int] | DataFrame
@@ -96,13 +76,13 @@ def append_to_vdir(
     concurrent reader's listing sees all of it or none of it."""
     if isinstance(docids, DataFrame):
         docids.select(F.col("docid").cast("long")).write.mode("append").parquet(
-            _tomb_dir(vdir)
+            reader.tomb_dir(vdir)
         )
         return
     ids = np.asarray(docids, dtype=np.int64)
     if ids.size == 0:
         return
-    d = _tomb_dir(vdir)
+    d = reader.tomb_dir(vdir)
     os.makedirs(d, exist_ok=True)
     name = f"part-{uuid.uuid4()}.parquet"
     tmp = os.path.join(d, f".{name}.tmp")
@@ -148,10 +128,8 @@ def delete_by_query(
     :func:`compact_index`, like every other delete path here."""
     vdir = catalog.resolve(index_root)
     if match_all:
-        hits = filter_live(
-            spark, vdir,
-            spark.read.parquet(os.path.join(vdir, "docs")).select("docid"),
-        )
+        r = reader.open_version(spark, vdir)
+        hits = r.live(r.docs().select("docid"))
     elif field is not None:
         from es_indexer_spark.query.lookup import term_query
 
@@ -177,8 +155,8 @@ def delete_by_query(
     try:
         n = hits.count()
         if n:
-            # the per-process tombstone-array cache is keyed by the
-            # tombstone-file listing, so the append invalidates it
+            # the reader re-validates its tombstone state against the
+            # tombstone-file listing, so the append is seen at once
             delete_docs(spark, index_root, hits)
     finally:
         hits.unpersist()
@@ -187,9 +165,7 @@ def delete_by_query(
 
 def tombstone_df(spark: SparkSession, vdir: str) -> DataFrame | None:
     """The tombstoned docids as a (distinct) DataFrame, or None when empty."""
-    if not _listing(vdir):
-        return None
-    return spark.read.parquet(_tomb_dir(vdir)).select("docid").distinct()
+    return reader.open_version(spark, vdir).tomb_df()
 
 
 # Above this many tombstoned docids the scorer paths stop collecting the set
@@ -199,31 +175,18 @@ def tombstone_df(spark: SparkSession, vdir: str) -> DataFrame | None:
 # creates a multi-GB driver array (VERDICT r3 "What's wrong" #1).
 DISTRIBUTED_TOMB_THRESHOLD = 10_000_000
 
-_TOMB_COUNT_CACHE: dict[tuple[str, str, tuple[str, ...]], int] = {}
-
 
 def tombstone_count(spark: SparkSession, vdir: str) -> int:
-    """Cheap cached tombstone-row count: the Σ of the files' footer row
-    counts, no Spark job (an UPPER bound on the distinct set when ids were
-    re-deleted, which is the safe direction for the distributed-path
-    cutoff)."""
-    sig = _listing(vdir)
-    if not sig:
-        return 0
-    key = (spark.sparkContext.applicationId, vdir, sig)
-    n = _TOMB_COUNT_CACHE.get(key)
-    if n is None:
-        while len(_TOMB_COUNT_CACHE) >= _TOMB_CACHE_MAX:
-            _TOMB_COUNT_CACHE.pop(next(iter(_TOMB_COUNT_CACHE)))
-        n = driver_read.count_rows(driver_read.data_files(_tomb_dir(vdir)))
-        _TOMB_COUNT_CACHE[key] = n
-    return n
+    """Cheap tombstone-row count: the Σ of the files' footer row counts, no
+    Spark job (an UPPER bound on the distinct set when ids were re-deleted,
+    which is the safe direction for the distributed-path cutoff)."""
+    return reader.open_version(spark, vdir).tomb_count()
 
 
 def tombstone_array(spark: SparkSession, vdir: str) -> np.ndarray | None:
     """Sorted np.int64 tombstone set for scorer-side filtering, read on the
-    driver (single-threaded, no Spark job) and cached per (session, version,
-    listing).
+    driver (single-threaded, no Spark job) and held by the version's reader
+    until the tombstone listing changes.
 
     Scale guard: collecting a corpus-scale delete set (e.g. after
     ``delete_by_query(match_all=True)``, the reference's cleanup shape) routes
@@ -231,32 +194,7 @@ def tombstone_array(spark: SparkSession, vdir: str) -> np.ndarray | None:
     prefer :func:`tombstone_shards` past :data:`DISTRIBUTED_TOMB_THRESHOLD`
     (the engine's ranked path does); this function warns and proceeds so
     admin surfaces (compaction itself) keep working."""
-    sig = _listing(vdir)
-    if not sig:
-        return None
-    key = (spark.sparkContext.applicationId, vdir, sig)
-    arr = _TOMB_CACHE.get(key)
-    if arr is None:
-        n = tombstone_count(spark, vdir)
-        if n > DISTRIBUTED_TOMB_THRESHOLD:
-            import warnings
-
-            warnings.warn(
-                f"collecting {n} tombstones to the driver — the delete set "
-                "approaches corpus scale; run compact_index() (or rebuild) "
-                "instead of serving queries through a driver-side array",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        while len(_TOMB_CACHE) >= _TOMB_CACHE_MAX:
-            _TOMB_CACHE.pop(next(iter(_TOMB_CACHE)))
-        arr = np.unique(
-            driver_read.read_column(
-                driver_read.data_files(_tomb_dir(vdir)), "docid"
-            ).astype(np.int64)
-        )
-        _TOMB_CACHE[key] = arr
-    return arr
+    return reader.open_version(spark, vdir).tomb_array()
 
 
 def tombstone_shards(
@@ -267,17 +205,7 @@ def tombstone_shards(
     postings blocks it reaches each scorer task carrying only that shard's
     deletes, flowing through the same single shuffle as the blocks (never the
     driver, never a broadcast)."""
-    if not _listing(vdir):
-        return None
-    return (
-        spark.read.parquet(_tomb_dir(vdir))
-        .select("docid")
-        .distinct()
-        .select(
-            "docid",
-            F.floor(F.col("docid") / F.lit(int(shard_size))).cast("long").alias("shard"),
-        )
-    )
+    return reader.open_version(spark, vdir).tomb_shards(shard_size)
 
 
 def live_mask(tomb: np.ndarray | None, docids: np.ndarray) -> np.ndarray | None:
@@ -295,40 +223,29 @@ def carry(
 ) -> int:
     """Carry a segment's tombstones into a merged version dir (docids remapped
     by the merge's ``docid_offset``) so logically deleted docs never resurrect
-    through a metadata-speed merge.  Returns the number of carried docids."""
-    if not _listing(src_vdir):
+    through a metadata-speed merge.  Returns the number of carried docids.
+
+    Up to :data:`DISTRIBUTED_TOMB_THRESHOLD` deletes (the reader's array
+    mode) the set is written as one driver-side file; above it, one Spark
+    append write that never collects the set."""
+    arr, shards = reader.open_version(spark, src_vdir).tombs()
+    if arr is not None:
+        append_to_vdir(spark, dst_vdir, arr + docid_offset)
+        return int(arr.size)
+    if shards is None:
         return 0
-    df = (
-        spark.read.parquet(_tomb_dir(src_vdir))
-        .select((F.col("docid") + docid_offset).alias("docid"))
-        .distinct()
-    )
+    df = shards.select((F.col("docid") + docid_offset).alias("docid"))
     n = df.count()
     if n:
-        df.write.mode("append").parquet(_tomb_dir(dst_vdir))
+        df.write.mode("append").parquet(reader.tomb_dir(dst_vdir))
     return n
 
 
 def filter_live(spark: SparkSession, vdir: str, df: DataFrame) -> DataFrame:
     """Drop tombstoned rows from a DataFrame with a ``docid`` column — the
-    doc-table query surface (point reads, scans, metadata joins).  Tiny
-    delete sets inline as a NOT-IN literal filter (cheap to evaluate; note a
-    negated IN canNOT row-group-prune — min/max stats never exclude a group
-    for an exclusion predicate — so the only gain is skipping the join, which
-    is why the cutoff is small); mid-size sets become a broadcast anti-join;
-    past :data:`DISTRIBUTED_TOMB_THRESHOLD` a plain (shuffle) anti-join so a
-    corpus-scale delete set never has to fit one executor's broadcast memory.
-    No-op when nothing is deleted."""
-    n = tombstone_count(spark, vdir)
-    if n == 0:
-        return df
-    if n <= 512:
-        tomb = tombstone_array(spark, vdir)
-        return df.filter(~F.col("docid").isin([int(x) for x in tomb]))
-    t = tombstone_df(spark, vdir)
-    if n <= DISTRIBUTED_TOMB_THRESHOLD:
-        return df.join(F.broadcast(t), "docid", "left_anti")
-    return df.join(t, "docid", "left_anti")
+    doc-table query surface (point reads, scans, metadata joins); see
+    :meth:`..reader.IndexReader.live`. No-op when nothing is deleted."""
+    return reader.open_version(spark, vdir).live(df)
 
 
 # --------------------------------------------------------------------------- compaction
@@ -401,25 +318,25 @@ def compact_index(spark: SparkSession, index_root: str) -> str:
     Returns the new version dir (or the current one when nothing is
     tombstoned).  After compaction, scores over the remaining corpus are
     identical to a fresh build of the filtered corpus (pytest-pinned)."""
-    vdir = catalog.resolve(index_root)
-    n_tomb = tombstone_count(spark, vdir)
-    if n_tomb == 0:
+    r = reader.open_index(spark, index_root)
+    vdir = r.vdir
+    if r.tomb_count() == 0:
         return vdir
     # past the distributed threshold the delete set NEVER lands on the driver
     # (compaction after a huge delete_by_query is exactly the case the
     # threshold protects): blocks cogroup with the shard-keyed tombstone DF
     # instead of closing over an array (VERDICT r4 weak #2)
-    distributed = n_tomb > DISTRIBUTED_TOMB_THRESHOLD
-    tomb = None if distributed else tombstone_array(spark, vdir)
+    tomb, tomb_sh = r.tombs()
+    distributed = tomb_sh is not None
     if distributed:
         # file-count n_tomb is an upper bound (re-deleted ids); the published
         # purged_docs metadata wants the distinct count — one cheap agg job
         # against a compaction-scale pass is fine
-        n_tomb = tombstone_df(spark, vdir).count()
+        n_tomb = r.tomb_df().count()
     if not distributed and (tomb is None or tomb.size == 0):
         return vdir
-    stats = catalog.read_stats(vdir)
-    k1, b, positions = stats["k1"], stats["b"], stats.get("positions", False)
+    stats = r.stats
+    k1, b, positions = r.k1, r.b, stats.get("positions", False)
     t0 = time.time()
 
     version = catalog.next_version(index_root)
@@ -428,8 +345,8 @@ def compact_index(spark: SparkSession, index_root: str) -> str:
     # docs: anti-join the tombstones (filter_live picks literal / broadcast /
     # shuffle anti-join by delete-set size), keep the docid-range-partitioned
     # sorted layout (point reads / scan_after stay row-group-pruned)
-    docs = spark.read.parquet(os.path.join(vdir, "docs"))
-    kept = filter_live(spark, vdir, docs)
+    docs = r.docs()
+    kept = r.live(docs)
     obs = Observation("compact_docs")
     n_parts = max(4, len(docs.inputFiles()))
     (
@@ -446,7 +363,7 @@ def compact_index(spark: SparkSession, index_root: str) -> str:
 
     # postings: one Arrow pass over the encoded blocks; re-encoded with the
     # post-delete avgdl so block-max bounds match the new stats
-    blocks = spark.read.parquet(os.path.join(vdir, "postings")).drop("batch")
+    blocks = r.postings().drop("batch")
     from es_indexer_spark.index.builder import BLOCK_SCHEMA
 
     selected = blocks.select(
@@ -454,7 +371,6 @@ def compact_index(spark: SparkSession, index_root: str) -> str:
         "gaps", "tfs", "dls", "poss", "max_tf", "cf", "max_score_free",
     )
     if distributed:
-        tomb_sh = tombstone_shards(spark, vdir, int(stats["shard_size"]))
 
         def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             local = np.unique(right["docid"].to_numpy(dtype=np.int64))

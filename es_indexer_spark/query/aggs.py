@@ -39,12 +39,11 @@ bucket exceeds a task's memory.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from es_indexer_spark.index import catalog
+from es_indexer_spark.index.reader import open_index
 
 _INTERVALS = ("year", "quarter", "month", "week", "day", "hour", "minute")
 
@@ -53,10 +52,8 @@ def index_docs(spark: SparkSession, index_root: str) -> DataFrame:
     """The live docs store of a published index — the frame ES aggregations
     run over when the search targets the index (tombstone-aware like every
     read surface)."""
-    from es_indexer_spark.index.tombstones import filter_live
-
-    vdir = catalog.resolve(index_root)
-    return filter_live(spark, vdir, spark.read.parquet(os.path.join(vdir, "docs")))
+    r = open_index(spark, index_root)
+    return r.live(r.docs())
 
 
 def date_histogram(
@@ -427,11 +424,8 @@ def rare_terms(
     ``df <= N`` predicate — no tokenization, no shuffle beyond the final
     order. The long-tail result can be large by definition; pass ``limit``
     to page it like ES's implicit size cap."""
-    from es_indexer_spark.query.engine import _dict_df
-
-    vdir = catalog.resolve(index_root)
     out = (
-        _dict_df(spark, vdir)
+        open_index(spark, index_root).dict_df()
         .filter(F.col("df") <= int(max_doc_count))
         .select("term", F.col("df").alias("doc_count"))
         .orderBy(F.asc("doc_count"), F.asc("term"))
@@ -1411,15 +1405,13 @@ def significant_text(
     (doc, term) pairs, one broadcast join of the small fg term set against
     the dictionary.
     """
-    from es_indexer_spark.index import catalog as _catalog
     from es_indexer_spark.query.boolean import bool_query
-    from es_indexer_spark.query.engine import _dict_df
 
     if min_doc_count < 1:
         raise ValueError("min_doc_count must be >= 1")
-    vdir = _catalog.resolve(index_root)
-    stats = _catalog.read_stats(vdir)
-    n_docs = float(stats["n_docs"])
+    r = open_index(spark, index_root)
+    stats = r.stats
+    n_docs = float(r.n_docs)
 
     hits = bool_query(spark, index_root, should=[query], k=None, lang=lang)
     if sample_size is not None:
@@ -1451,7 +1443,7 @@ def significant_text(
         F.count("*").cast("long").alias("fg_count")
     )
     nf = fg_docs.agg(F.count("*").cast("double").alias("_nf"))
-    d = _dict_df(spark, vdir).select("term", F.col("df").alias("bg_count"))
+    d = r.dict_df().select("term", F.col("df").alias("bg_count"))
     fg_pct = F.col("fg_count") / F.col("_nf")
     bg_pct = F.col("bg_count") / F.lit(n_docs)
     return (

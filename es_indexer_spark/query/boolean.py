@@ -52,8 +52,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from es_indexer_spark.analysis.tokenizer import tokenize_one
-from es_indexer_spark.index import catalog
-from es_indexer_spark.index.codec import decode_block, decode_positions
+from es_indexer_spark.index.codec import bm25, decode_block, decode_positions
+from es_indexer_spark.index.reader import open_index
 from es_indexer_spark.query.bm25 import lucene_idf
 from es_indexer_spark.index.tombstones import live_mask
 from es_indexer_spark.query.phrase import _chain_starts, _sorted_member
@@ -173,10 +173,7 @@ def _bool_shard_scorer(
                 if want_score:
                     tf = t.astype(np.float64)
                     dl = l.astype(np.float64)
-                    c_parts.append(
-                        idfs[term] * tf * (k1 + 1.0)
-                        / (tf + k1 * (1.0 - b + b * dl / avgdl))
-                    )
+                    c_parts.append(bm25(idfs[term], tf, dl, avgdl, k1, b))
             if not d_parts:
                 continue
             docs = np.concatenate(d_parts)
@@ -230,10 +227,7 @@ def _bool_shard_scorer(
                 return None
             pdocs, ptf = np.unique(pk >> 32, return_counts=True)
             dlv = dl_vals[np.searchsorted(dl_docs, pdocs)]
-            tf = ptf.astype(np.float64)
-            return pdocs, w * tf * (k1 + 1.0) / (
-                tf + k1 * (1.0 - b + b * dlv / avgdl)
-            )
+            return pdocs, bm25(w, ptf.astype(np.float64), dlv, avgdl, k1, b)
 
         mp_hits = [phrase_hits(*p) for p in must_phrases]
         if any(h is None for h in mp_hits):
@@ -542,17 +536,16 @@ def bool_query(
       clause (each a pushed predicate), emitting kind-tagged (shard, docid)
       rows that ride the SAME single cogroup as the non-scoring filter set
       and the distributed tombstone set — clause count never adds a shuffle."""
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
+    r = open_index(spark, index_root)
+    vdir, stats = r.vdir, r.stats
+    n_docs, avgdl, k1, b = r.n_docs, r.avgdl, r.k1, r.b
     from es_indexer_spark.query import engine
-    from es_indexer_spark.query.engine import _tomb_mode, empty_scores
+    from es_indexer_spark.query.engine import empty_scores
 
     # past DISTRIBUTED_TOMB_THRESHOLD the delete set is shard-keyed and rides
     # the SAME cogroup as the range-filter set (kind-tagged union) — never a
     # driver array, no extra shuffle
-    tomb, tomb_shards = _tomb_mode(spark, vdir, int(stats["shard_size"]))
+    tomb, tomb_shards = r.tombs()
 
     from es_indexer_spark.analysis.tokenizer import split_lang_marker
 
@@ -628,9 +621,7 @@ def bool_query(
         match_phrase_prefix: df desc, term asc, capped."""
         if not qs:
             return []
-        from es_indexer_spark.query.engine import _dict_df
-
-        d = _dict_df(spark, vdir)
+        d = r.dict_df()
         out: list[tuple[list[str], dict[str, float]]] = []
         for q in qs:
             text, boost = clause(q)
@@ -707,14 +698,13 @@ def bool_query(
             return []
         import re as _re
 
-        from es_indexer_spark.query.engine import _dict_df
         from es_indexer_spark.query.suggest import wildcard_pattern_to_regex
 
         out: list[tuple[list[str], float]] = []
         for q in qs:
             pat, boost = clause(q)
             p = pat.lower()
-            d = _dict_df(spark, vdir)
+            d = r.dict_df()
             lit = _re.match(r"^[^*?]*", p).group(0)
             if lit:
                 d = d.filter(F.col("term").startswith(lit))
@@ -834,22 +824,12 @@ def bool_query(
         else:
             doc_preds.append(F.col(fld) == F.lit(val))
     if doc_preds:
-        from es_indexer_spark.index.tombstones import filter_live
-
-        import os as _os
-
         pred = doc_preds[0]
         for p_ in doc_preds[1:]:
             pred = pred & p_
-        rng_df = filter_live(
-            spark,
-            vdir,
-            spark.read.parquet(_os.path.join(vdir, "docs"))
-            .filter(pred)
-            .select("docid"),
-        ).select(
+        rng_df = r.live(r.docs().filter(pred).select("docid")).select(
             "docid",
-            F.floor(F.col("docid") / F.lit(int(stats["shard_size"])))
+            F.floor(F.col("docid") / F.lit(r.shard_size))
             .cast("long")
             .alias("shard"),
         )
@@ -877,23 +857,16 @@ def bool_query(
         sdc.append((False, bst, F.col(fld).isNotNull()))
     clause_df = None
     if sdc:
-        import os as _os
-
-        from es_indexer_spark.index.tombstones import filter_live
-
         flags = F.array_compact(F.array(*[
             F.when(pred, F.lit(2 + i)).otherwise(F.lit(None).cast("int"))
             for i, (_r, _b, pred) in enumerate(sdc)
         ]))
-        clause_df = filter_live(
-            spark,
-            vdir,
-            spark.read.parquet(_os.path.join(vdir, "docs"))
-            .select("docid", F.explode(flags).alias("kind")),
+        clause_df = r.live(
+            r.docs().select("docid", F.explode(flags).alias("kind"))
         ).select(
             "docid",
             F.col("kind").cast("int").alias("kind"),
-            F.floor(F.col("docid") / F.lit(int(stats["shard_size"])))
+            F.floor(F.col("docid") / F.lit(r.shard_size))
             .cast("long")
             .alias("shard"),
         )
@@ -916,10 +889,7 @@ def bool_query(
         set(must_t) | set(should_t) | set(not_t) | set(filt_t) | set(phrase_t)
         | set(const_t) | set(mphr_t) | set(sphr_t)
     )
-    from es_indexer_spark.query.engine import _dict_lookup, _load_blocks
-
-    dict_rows = _dict_lookup(spark, vdir, all_terms)
-    found = {r["term"]: r for r in dict_rows}
+    found = {row["term"]: row for row in r.lookup(all_terms)}
     # an absent required term / fully-absent required group -> no results
     if any(t not in found for t in filt_t + phrase_t + mphr_t):
         return empty_scores(spark)
@@ -1011,10 +981,10 @@ def bool_query(
         # the same scorer per shard, zero Spark jobs
         cols = _BLOCK_COLUMNS + (("poss",) if scorer.wants_positions else ())
         return engine._local_topk(
-            spark, engine._local_blocks(vdir, present, buckets, cols), scorer, k
+            spark, r.local_blocks(present, buckets, cols), scorer, k
         )
     if present:
-        blocks = _load_blocks(spark, vdir, present, buckets)
+        blocks = r.blocks(present, buckets)
     else:
         # every term clause was absent from the dictionary but the (required)
         # range still defines the candidates — drive the cogroup with an

@@ -625,7 +625,6 @@ def query_string(
     bare ``term~``; an explicit ``term~N`` overrides it (all explicit values
     in one query must agree). ``*``/``*:*`` match_all returns every live doc
     constant-score 0 straight off the docs store (no postings scan)."""
-    from es_indexer_spark.index import catalog
     from es_indexer_spark.query.boolean import bool_query
 
     # grouped form: parens OUTSIDE quoted phrases route to the grouped
@@ -640,16 +639,12 @@ def query_string(
 
     p = parse_query_string(query, default_operator)
     if p.get("match_all"):
-        import os
+        from es_indexer_spark.index.reader import open_index
 
-        from es_indexer_spark.index.tombstones import filter_live
-
-        vdir = catalog.resolve(index_root)
-        docs = filter_live(
-            spark,
-            vdir,
-            spark.read.parquet(os.path.join(vdir, "docs")).select("docid"),
-        ).select("docid", F.lit(0.0).alias("score"))
+        r = open_index(spark, index_root)
+        docs = r.live(r.docs().select("docid")).select(
+            "docid", F.lit(0.0).alias("score")
+        )
         return docs if k is None else docs.orderBy(F.asc("docid")).limit(k)
 
     bounds: dict[str, dict] = {}

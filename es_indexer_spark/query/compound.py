@@ -46,7 +46,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from es_indexer_spark.index import catalog
+from es_indexer_spark.index.reader import open_index
 from es_indexer_spark.query.boolean import bool_query
 
 _SCORE_SCHEMA = "docid long, score double"
@@ -205,11 +205,8 @@ def terms_set(
     agg = u.groupBy("docid").agg(
         F.countDistinct("_c").alias("_matched"), F.sum("score").alias("score")
     )
-    vdir = catalog.resolve(index_root)
-    import os as _os
-
     req = (
-        spark.read.parquet(_os.path.join(vdir, "docs"))
+        open_index(spark, index_root).docs()
         .select("docid", F.expr(minimum_should_match_expr).cast("long").alias("_req"))
     )
     out = (
@@ -244,12 +241,9 @@ def match_bool_prefix(
     bucket-pruned postings scan as the standalone prefix query — the union
     with the scored clauses is one docid hash agg."""
     from es_indexer_spark.analysis.tokenizer import tokenize_one
-    from es_indexer_spark.index import catalog as _catalog
     from es_indexer_spark.query.suggest import prefix_query
 
-    vdir = catalog.resolve(index_root)
-    stats = _catalog.read_stats(vdir)
-    toks = tokenize_one(text, stats["tokenizer"], lang=lang)
+    toks = tokenize_one(text, open_index(spark, index_root).tokenizer, lang=lang)
     if not toks:
         return spark.createDataFrame([], _SCORE_SCHEMA)
     full, last = toks[:-1], toks[-1]
@@ -343,10 +337,6 @@ def function_score_functions(
     algebra (the array-combine is an ``aggregate`` over a compacted
     array literal — no UDF); scores round at 6 before ranking (the
     engine-wide ulp-stability rule), ties by docid."""
-    import os
-
-    from es_indexer_spark.index import catalog
-    from es_indexer_spark.query.boolean import bool_query
     from es_indexer_spark.query.dsl_aggs import _leaf_cond
 
     if score_mode not in ("multiply", "sum", "avg", "max", "min", "first"):
@@ -357,8 +347,7 @@ def function_score_functions(
         query.select("docid", "score") if isinstance(query, DataFrame)
         else bool_query(spark, index_root, should=[query], k=None, lang=lang)
     )
-    vdir = catalog.resolve(index_root)
-    docs = spark.read.parquet(os.path.join(vdir, "docs"))
+    docs = open_index(spark, index_root).docs()
 
     def _decay_value(kind: str, spec: dict) -> Column:
         (field, p), = spec.items()

@@ -20,7 +20,7 @@ import re as _re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from es_indexer_spark.analysis.tokenizer import tokenize_one
-from es_indexer_spark.index import catalog
+from es_indexer_spark.index.reader import open_index
 from es_indexer_spark.query.engine import topk
 
 
@@ -157,9 +157,7 @@ def highlight(
 ) -> DataFrame:
     """BM25 top-k with highlighted fragments: run the ranked engine, then
     decorate the ≤k hits from the source table."""
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    terms = tokenize_one(query, stats["tokenizer"], lang=lang)
+    terms = tokenize_one(query, open_index(spark, index_root).tokenizer, lang=lang)
     hits = topk(spark, index_root, query, k=k, lang=lang)
     return highlight_hits(
         hits, src, id_col, text_col, terms,
@@ -195,10 +193,8 @@ def highlight_phrase(
     from es_indexer_spark.analysis.tokenizer import split_lang_marker
     from es_indexer_spark.query.phrase import phrase_match
 
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
     terms, _marker = split_lang_marker(
-        tokenize_one(phrase, stats["tokenizer"], lang=lang)
+        tokenize_one(phrase, open_index(spark, index_root).tokenizer, lang=lang)
     )
     hits = phrase_match(spark, index_root, phrase, k=k, lang=lang).select(
         "docid", "score"

@@ -50,11 +50,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from es_indexer_spark.analysis.tokenizer import tokenize_one
-from es_indexer_spark.index import catalog
-from es_indexer_spark.index.codec import decode_block, decode_positions
+from es_indexer_spark.index.codec import bm25, decode_block, decode_positions
+from es_indexer_spark.index.reader import IndexReader
 from es_indexer_spark.index.tombstones import live_mask
 from es_indexer_spark.query.bm25 import lucene_idf
-from es_indexer_spark.query.phrase import _chain_starts, _PHRASE_SCHEMA
+from es_indexer_spark.query.engine import empty_scores
+from es_indexer_spark.query.phrase import (
+    _PHRASE_SCHEMA, _chain_starts, _positional, _ranked,
+)
 
 _FILTER_KINDS = (
     "containing", "not_containing", "contained_by", "not_contained_by",
@@ -300,7 +303,7 @@ def _all_terms(spec: dict) -> set[str]:
     return out
 
 
-def _compile(spec: dict, tokenizer: str, lang, dict_df, max_exp: int = 50) -> dict:
+def _compile(spec: dict, r: IndexReader, lang, max_exp: int = 50) -> dict:
     """Analyze ``match`` texts into token lists and expand ``prefix`` rules
     against the dictionary (top-``max_expansions`` by df, the Lucene rewrite
     bound). Returns a new spec tree; raises on unknown rule names so typos
@@ -312,23 +315,23 @@ def _compile(spec: dict, tokenizer: str, lang, dict_df, max_exp: int = 50) -> di
         if k not in known:
             raise ValueError(f"unknown intervals rule field: {k!r}")
     if "match" in spec:
-        out["match"] = tokenize_one(spec["match"], tokenizer, lang=lang)
+        out["match"] = tokenize_one(spec["match"], r.tokenizer, lang=lang)
         if not out["match"]:
             raise ValueError(f"intervals match analyzes to no tokens: {spec['match']!r}")
     elif "prefix" in spec:
         cap = int(spec.get("max_expansions", max_exp))
         rows = (
-            dict_df.filter(F.col("term").startswith(spec["prefix"]))
+            r.dict_df().filter(F.col("term").startswith(spec["prefix"]))
             .orderBy(F.desc("df"), F.asc("term"))
             .limit(cap)
             .collect()
         )
-        out["prefix"] = sorted(r["term"] for r in rows)
+        out["prefix"] = sorted(row["term"] for row in rows)
     elif "any_of" in spec:
-        out["any_of"] = [_compile(c, tokenizer, lang, dict_df, max_exp)
+        out["any_of"] = [_compile(c, r, lang, max_exp)
                          for c in spec["any_of"]]
     elif "all_of" in spec:
-        out["all_of"] = [_compile(c, tokenizer, lang, dict_df, max_exp)
+        out["all_of"] = [_compile(c, r, lang, max_exp)
                          for c in spec["all_of"]]
     else:
         raise ValueError(f"intervals rule needs match/prefix/any_of/all_of: {spec}")
@@ -337,7 +340,7 @@ def _compile(spec: dict, tokenizer: str, lang, dict_df, max_exp: int = 50) -> di
             out[k] = spec[k]
     if "filter" in spec:
         out["filter"] = {
-            kind: _compile(frule, tokenizer, lang, dict_df, max_exp)
+            kind: _compile(frule, r, lang, max_exp)
             for kind, frule in spec["filter"].items()
         }
     return out
@@ -396,7 +399,7 @@ def _intervals_shard_scorer(
         order = np.argsort(docs, kind="stable")
         dl = lens[order][np.searchsorted(docs[order], docids)].astype(np.float64)
         ptf_f = ptf.astype(np.float64)
-        s = sum_idf * ptf_f * (k1 + 1.0) / (ptf_f + k1 * (1.0 - b + b * dl / avgdl))
+        s = bm25(sum_idf, ptf_f, dl, avgdl, k1, b)
         return pd.DataFrame(
             {"docid": docids, "phrase_tf": ptf.astype(np.int64), "score": s}
         )
@@ -422,40 +425,19 @@ def intervals_query(
     pruned postings scan over their buckets, a per-shard vectorized
     interval-algebra pass, then the global top-k — identical stage shape to
     the phrase path, so it scales the same way."""
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    if not stats.get("positions"):
-        raise ValueError(
-            f"index at {index_root} was built without store_positions=True"
-        )
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
-    from es_indexer_spark.query.engine import (
-        _apply_scorer, _dict_df, _dict_lookup, _postings_df, _tomb_mode,
+    r = _positional(spark, index_root)
+    tomb, tomb_shards = r.tombs()
+    compiled = _compile(spec, r, lang)
+    found = {row["term"]: row for row in r.lookup(sorted(_all_terms(compiled)))}
+    if not found:
+        return empty_scores(spark, _PHRASE_SCHEMA)
+    sum_idf = float(_spec_idf(compiled, found, r.n_docs))
+    buckets = sorted({row["bucket"] for row in found.values()})
+    return _ranked(
+        r, sorted(found), buckets,
+        _intervals_shard_scorer(compiled, sum_idf, r.k1, r.b, r.avgdl, tomb),
+        tomb_shards, k,
     )
-
-    tomb, tomb_shards = _tomb_mode(spark, vdir, int(stats["shard_size"]))
-    compiled = _compile(spec, stats["tokenizer"], lang, _dict_df(spark, vdir))
-    terms = sorted(_all_terms(compiled))
-    if not terms:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
-    dict_rows = [r for r in _dict_lookup(spark, vdir, terms) if r is not None]
-    if not dict_rows:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
-    found = {r["term"]: r for r in dict_rows}
-    sum_idf = float(_spec_idf(compiled, found, n_docs))
-    buckets = sorted({r["bucket"] for r in dict_rows})
-    blocks = _postings_df(spark, vdir).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(sorted(found))
-    )
-    scored = _apply_scorer(
-        blocks,
-        _intervals_shard_scorer(compiled, sum_idf, k1, b, avgdl, tomb),
-        tomb_shards,
-        schema=_PHRASE_SCHEMA,
-    )
-    out = scored.orderBy(F.desc("score"), F.asc("docid"))
-    return out.limit(k) if k is not None else out
 
 
 def span_containing(

@@ -23,7 +23,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from es_indexer_spark.index import catalog
+from es_indexer_spark.index.reader import open_index
 
 
 def doc_lookup(
@@ -31,15 +31,11 @@ def doc_lookup(
 ) -> DataFrame:
     """Fetch doc rows by exact docid (the `ids` query analog). The isin filter
     is pushed to parquet; docid-sorted files make it a row-group point read."""
-    from es_indexer_spark.index.tombstones import filter_live
-
-    vdir = catalog.resolve(index_root)
-    df = spark.read.parquet(os.path.join(vdir, "docs")).filter(
-        F.col("docid").isin([int(d) for d in docids])
-    )
+    r = open_index(spark, index_root)
+    df = r.docs().filter(F.col("docid").isin([int(d) for d in docids]))
     # a logically deleted doc is gone from every read surface immediately
     # (the reference's deleteDocumentByUUID contract)
-    return filter_live(spark, vdir, df)
+    return r.live(df)
 
 
 def mget(
@@ -62,18 +58,13 @@ def mget(
     read, and the big side is never shuffled. ``id_field`` defaults to
     ``docid`` (== the external id for ``id_col``-built indexes); pass a meta
     column name for indexes that carry the external id as metadata."""
-    from es_indexer_spark.index.tombstones import filter_live
-
-    vdir = catalog.resolve(index_root)
+    r = open_index(spark, index_root)
     vals = [int(d) for d in ids]
     req = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "req_idx long, __req_id long"
     )
-    docs = spark.read.parquet(os.path.join(vdir, "docs")).filter(
-        F.col(id_field).isin(vals)
-    )
     # deleted docs are "not found" on every read surface immediately
-    docs = filter_live(spark, vdir, docs)
+    docs = r.live(r.docs().filter(F.col(id_field).isin(vals)))
     keep = [c for c in docs.columns if c != id_field]
     out = (
         req.join(
@@ -99,13 +90,11 @@ def scan_after(
     """One page of the docid-ordered scan, resuming strictly after ``after``
     (keyset pagination — the `search_after` analog; the caller passes the last
     docid of the previous page as the next resume token)."""
-    from es_indexer_spark.index.tombstones import filter_live
-
-    vdir = catalog.resolve(index_root)
-    df = spark.read.parquet(os.path.join(vdir, "docs"))
+    r = open_index(spark, index_root)
+    df = r.docs()
     if after is not None:
         df = df.filter(F.col("docid") > int(after))
-    return filter_live(spark, vdir, df).orderBy(F.asc("docid")).limit(page_size)
+    return r.live(df).orderBy(F.asc("docid")).limit(page_size)
 
 
 def _docs_where(
@@ -115,11 +104,8 @@ def _docs_where(
     range): predicate pushed into the docs-store parquet scan
     (dictionary/row-group pruning), tombstone-aware, docid-ordered so
     size(1) is deterministic."""
-    from es_indexer_spark.index.tombstones import filter_live
-
-    vdir = catalog.resolve(index_root)
-    df = spark.read.parquet(os.path.join(vdir, "docs")).filter(pred)
-    df = filter_live(spark, vdir, df).orderBy(F.asc("docid"))
+    r = open_index(spark, index_root)
+    df = r.live(r.docs().filter(pred)).orderBy(F.asc("docid"))
     return df.limit(size) if size is not None else df
 
 
@@ -243,8 +229,8 @@ def terms_enum(
     ``StringStartsWith`` over contiguous row groups; the meta path is a
     column-pruned scan + partial/final distinct. Both end in a k-row
     TakeOrdered — no corpus-sized sort."""
-    vdir = catalog.resolve(index_root)
-    docs = spark.read.parquet(os.path.join(vdir, "docs"))
+    r = open_index(spark, index_root)
+    docs = r.docs()
     if field in docs.columns and field not in ("docid", "sha256", "doc_len"):
         src = (
             docs.where(F.col(field).isNotNull())
@@ -252,7 +238,7 @@ def terms_enum(
             .distinct()
         )
     else:
-        src = spark.read.parquet(os.path.join(vdir, "dict")).select("term")
+        src = spark.read.parquet(os.path.join(r.vdir, "dict")).select("term")
     p = str(string or "")
     if case_insensitive:
         pred = F.lower(F.col("term")).startswith(p.lower())
@@ -275,12 +261,9 @@ def facet_counts(
     partial+final hash aggregation over the column-pruned docs scan; buckets
     ordered by doc_count desc then key asc (ES terms-agg ordering),
     tombstone-aware like every other read surface."""
-    from es_indexer_spark.index.tombstones import filter_live
-
-    vdir = catalog.resolve(index_root)
-    df = spark.read.parquet(os.path.join(vdir, "docs")).select(field, "docid")
+    r = open_index(spark, index_root)
     return (
-        filter_live(spark, vdir, df)
+        r.live(r.docs().select(field, "docid"))
         .groupBy(field)
         .agg(F.count("*").alias("doc_count"))
         .orderBy(F.desc("doc_count"), F.asc(field))
@@ -337,18 +320,13 @@ def term_vectors(
     Work: O(|text|) driver-side analysis (bytes of one request, never data)
     + ONE pruned dictionary lookup joined broadcast."""
     from es_indexer_spark.analysis.tokenizer import split_lang_marker, tokenize_one
-    from es_indexer_spark.index import catalog as _catalog
-    from es_indexer_spark.query.engine import _dict_lookup
 
-    vdir = _catalog.resolve(index_root)
-    stats = _catalog.read_stats(vdir)
-    toks, _marker = split_lang_marker(
-        tokenize_one(text, stats["tokenizer"], lang=lang)
-    )
+    r = open_index(spark, index_root)
+    toks, _marker = split_lang_marker(tokenize_one(text, r.tokenizer, lang=lang))
     tv: dict[str, list[int]] = {}
     for pos, t in enumerate(toks):
         tv.setdefault(t, []).append(pos)
-    found = {r["term"]: r for r in _dict_lookup(spark, vdir, sorted(tv))}
+    found = {row["term"]: row for row in r.lookup(sorted(tv))}
     rows = [
         (
             t,
@@ -379,25 +357,18 @@ def mterm_vectors(
     ONE pruned dictionary lookup instead of one per doc. Output adds a
     ``doc_key`` column; per-doc rows match ``term_vectors`` exactly."""
     from es_indexer_spark.analysis.tokenizer import split_lang_marker, tokenize_one
-    from es_indexer_spark.index import catalog as _catalog
-    from es_indexer_spark.query.engine import _dict_lookup
 
-    vdir = _catalog.resolve(index_root)
-    stats = _catalog.read_stats(vdir)
+    r = open_index(spark, index_root)
     per_doc: dict = {}
     all_terms: set[str] = set()
     for key, text in docs.items():
-        toks, _marker = split_lang_marker(
-            tokenize_one(text, stats["tokenizer"], lang=lang)
-        )
+        toks, _marker = split_lang_marker(tokenize_one(text, r.tokenizer, lang=lang))
         tv: dict[str, list[int]] = {}
         for pos, t in enumerate(toks):
             tv.setdefault(t, []).append(pos)
         per_doc[key] = tv
         all_terms.update(tv)
-    found = {
-        r["term"]: r for r in _dict_lookup(spark, vdir, sorted(all_terms))
-    }
+    found = {row["term"]: row for row in r.lookup(sorted(all_terms))}
     rows = [
         (
             str(key),

@@ -31,10 +31,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from es_indexer_spark.analysis.tokenizer import tokenize_one
-from es_indexer_spark.index import catalog
 from es_indexer_spark.index.builder import build_index
-from es_indexer_spark.index.codec import decode_block
+from es_indexer_spark.index.codec import bm25, decode_block
+from es_indexer_spark.index.reader import open_index
+from es_indexer_spark.query.engine import empty_scores
 from es_indexer_spark.query.bm25 import lucene_idf
 from es_indexer_spark.index.tombstones import live_mask
 
@@ -120,10 +120,7 @@ def _multi_shard_scorer(
                         continue
                 tf = t.astype(np.float64)
                 dl = l.astype(np.float64)
-                c_parts.append(
-                    idfs[term] * tf * (k1 + 1.0)
-                    / (tf + k1 * (1.0 - b + b * dl / avgdl))
-                )
+                c_parts.append(bm25(idfs[term], tf, dl, avgdl, k1, b))
                 d_parts.append(d64)
             if not d_parts:
                 continue
@@ -204,8 +201,7 @@ def _combined_norms_df(
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         joined = None
         for f_ in fields:
-            vdir = catalog.resolve(field_dir(root, f_))
-            d = spark.read.parquet(os.path.join(vdir, "docs")).select(
+            d = open_index(spark, field_dir(root, f_)).docs().select(
                 "docid", F.col("doc_len").alias(f"dl_{f_}")
             )
             joined = d if joined is None else joined.join(d, "docid", "full")
@@ -290,10 +286,7 @@ def _combined_shard_scorer(
             if uniq.size == 0:
                 continue
             dlc = norm_dlc[pos_c]
-            contrib = (
-                idfs[term] * tfc * (k1 + 1.0)
-                / (tfc + k1 * (1.0 - b + b * dlc / avgdl_c))
-            )
+            contrib = bm25(idfs[term], tfc, dlc, avgdl_c, k1, b)
             if acc_docs is None:
                 acc_docs, acc_sc = uniq, contrib
             else:
@@ -342,20 +335,14 @@ def combined_fields(
     portal's multi-field ranked search surface
     (geonetwork4-api/.../GeoNetworkServiceImpl.java:97-120); combined_fields
     semantics are public ES/Lucene behavior."""
-    from es_indexer_spark.query.engine import _dict_df, _load_blocks, _tomb_mode
-
     if not weights:
         raise ValueError("combined_fields needs at least one field weight")
     if any(w <= 0 for w in weights.values()):
         raise ValueError("combined_fields weights must be positive")
     fields = sorted(weights)
-    tokenizers, shard_sizes = set(), set()
-    stats_by: dict[str, dict] = {}
-    for f_ in fields:
-        st = catalog.read_stats(catalog.resolve(field_dir(root, f_)))
-        stats_by[f_] = st
-        tokenizers.add(st["tokenizer"])
-        shard_sizes.add(st["shard_size"])
+    readers = {f_: open_index(spark, field_dir(root, f_)) for f_ in fields}
+    tokenizers = {r.tokenizer for r in readers.values()}
+    shard_sizes = {r.shard_size for r in readers.values()}
     if len(tokenizers) > 1:
         raise ValueError(
             f"combined_fields requires one shared analyzer, got {sorted(tokenizers)}"
@@ -366,27 +353,24 @@ def combined_fields(
             "rebuild with build_multi_index so shards align across fields"
         )
     shard_size = shard_sizes.pop()
-    st0 = stats_by[fields[0]]
-    n_docs, k1, b = st0["n_docs"], st0["k1"], st0["b"]
-    qterms = sorted(set(tokenize_one(query, st0["tokenizer"], lang=lang)))
-    if not qterms:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+    r0 = readers[fields[0]]
+    n_docs, k1, b = r0.n_docs, r0.k1, r0.b
+    qterms = r0.analyze(query, lang)
 
     # pseudo-field stats: df* = max over fields; avgdl* = Σ w_f · avgdl_f
     df_star: dict[str, float] = {}
     buckets_by: dict[str, list[int]] = {}
     terms_by: dict[str, list[str]] = {}
     for f_ in fields:
-        vdir = catalog.resolve(field_dir(root, f_))
-        rows = _dict_df(spark, vdir).filter(F.col("term").isin(qterms)).collect()
-        terms_by[f_] = sorted({r["term"] for r in rows})
-        buckets_by[f_] = sorted({r["bucket"] for r in rows})
-        for r in rows:
-            df_star[r["term"]] = max(df_star.get(r["term"], 0.0), float(r["df"]))
+        rows = readers[f_].lookup(qterms)
+        terms_by[f_] = sorted({row["term"] for row in rows})
+        buckets_by[f_] = sorted({row["bucket"] for row in rows})
+        for row in rows:
+            df_star[row["term"]] = max(df_star.get(row["term"], 0.0), float(row["df"]))
     if not df_star:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
     idfs = {t: lucene_idf(n_docs, d) for t, d in df_star.items()}
-    avgdl_c = float(sum(weights[f_] * stats_by[f_]["avgdl"] for f_ in fields))
+    avgdl_c = float(sum(weights[f_] * readers[f_].avgdl for f_ in fields))
 
     parts: list[DataFrame] = []
     tomb_parts: list[DataFrame] = []
@@ -394,8 +378,7 @@ def combined_fields(
     for f_ in fields:
         if not terms_by[f_]:
             continue
-        vdir = catalog.resolve(field_dir(root, f_))
-        tomb_arr, tomb_sh = _tomb_mode(spark, vdir, int(shard_size))
+        tomb_arr, tomb_sh = readers[f_].tombs()
         if tomb_arr is not None and tomb_arr.size:
             tomb_arrays.append(tomb_arr)
         if tomb_sh is not None:
@@ -406,13 +389,11 @@ def combined_fields(
                 )
             )
         parts.append(
-            _load_blocks(spark, vdir, terms_by[f_], buckets_by[f_]).select(
+            readers[f_].blocks(terms_by[f_], buckets_by[f_]).select(
                 F.lit(f_).alias("field"), "term", "shard",
                 "gaps", "tfs", "dls", "first_docid",
             )
         )
-    if not parts:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
     blocks = parts[0]
     for p in parts[1:]:
         blocks = blocks.unionByName(p)
@@ -472,8 +453,6 @@ def multi_match(
     chain — the same semantics as the single-field engine's ``topk``."""
     if match_type not in ("most_fields", "best_fields", "cross_fields"):
         raise ValueError(f"unknown match_type: {match_type}")
-    from es_indexer_spark.query.engine import _dict_df, _load_blocks, _tomb_mode
-
     field_params: dict[str, tuple] = {}
     raw_dfs: dict[str, tuple[dict[str, float], int]] = {}
     tombs: dict[str, np.ndarray | None] = {}
@@ -481,46 +460,26 @@ def multi_match(
     shard_sizes = set()
     parts: list[DataFrame] = []
     for field, boost in boosts.items():
-        vdir = catalog.resolve(field_dir(root, field))
-        stats = catalog.read_stats(vdir)
-        shard_sizes.add(stats["shard_size"])
-        qterms = sorted(set(tokenize_one(query, stats["tokenizer"], lang=lang)))
-        if synonyms:
-            from es_indexer_spark.analysis.synonyms import expand_terms
-
-            qterms = sorted(
-                set(
-                    expand_terms(
-                        qterms,
-                        synonyms,
-                        lambda s: tokenize_one(s, stats["tokenizer"], lang=lang),
-                    )
-                )
-            )
-        if not qterms:
-            continue
-        dict_rows = (
-            _dict_df(spark, vdir).filter(F.col("term").isin(qterms)).collect()
-        )
+        r = open_index(spark, field_dir(root, field))
+        shard_sizes.add(r.shard_size)
+        dict_rows = r.lookup(r.analyze(query, lang, synonyms))
         if not dict_rows:
             continue
-        dfs_f = {r["term"]: float(r["df"]) for r in dict_rows}
+        dfs_f = {row["term"]: float(row["df"]) for row in dict_rows}
         # per-field idf (Lucene per-field statistics); cross_fields
         # overwrites these with the blended idf after the loop
-        idfs = {t: lucene_idf(stats["n_docs"], d) for t, d in dfs_f.items()}
-        field_params[field] = (
-            idfs, stats["avgdl"], stats["k1"], stats["b"], float(boost)
-        )
-        raw_dfs[field] = (dfs_f, int(stats["n_docs"]))
-        tomb_arr, tomb_sh = _tomb_mode(spark, vdir, int(stats["shard_size"]))
+        idfs = {t: lucene_idf(r.n_docs, d) for t, d in dfs_f.items()}
+        field_params[field] = (idfs, r.avgdl, r.k1, r.b, float(boost))
+        raw_dfs[field] = (dfs_f, int(r.n_docs))
+        tomb_arr, tomb_sh = r.tombs()
         tombs[field] = tomb_arr
         if tomb_sh is not None:
             tomb_parts.append(
                 tomb_sh.select(F.lit(field).alias("field"), "docid", "shard")
             )
-        buckets = sorted({r["bucket"] for r in dict_rows})
+        buckets = sorted({row["bucket"] for row in dict_rows})
         parts.append(
-            _load_blocks(spark, vdir, sorted(idfs), buckets)
+            r.blocks(sorted(idfs), buckets)
             .select(
                 F.lit(field).alias("field"), "term", "shard",
                 "gaps", "tfs", "dls", "first_docid",
@@ -532,7 +491,7 @@ def multi_match(
             "rebuild with build_multi_index so shards align across fields"
         )
     if not parts:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
     if match_type == "cross_fields":
         # blended statistics (Lucene BlendedTermQuery): every field scores
         # a term with idf from the MAX df across fields — "one big field"
@@ -616,7 +575,7 @@ def multi_match_phrase(
             )
         )
     if not parts:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
+        return empty_scores(spark)
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)

@@ -27,13 +27,40 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from es_indexer_spark.analysis.tokenizer import tokenize_one
-from es_indexer_spark.index import catalog
-from es_indexer_spark.index.codec import decode_block, decode_positions
-from es_indexer_spark.query.bm25 import lucene_idf
+from es_indexer_spark.analysis.tokenizer import split_lang_marker, tokenize_one
+from es_indexer_spark.index.codec import bm25, decode_block, decode_positions
+from es_indexer_spark.index.reader import IndexReader, open_index
 from es_indexer_spark.index.tombstones import live_mask
+from es_indexer_spark.query.bm25 import lucene_idf
+from es_indexer_spark.query.engine import _apply_scorer, empty_scores
 
 _PHRASE_SCHEMA = "docid long, phrase_tf long, score double"
+
+
+def _positional(spark: SparkSession, index_root: str) -> IndexReader:
+    """The reader of a positional index (raises on one built without
+    positions)."""
+    r = open_index(spark, index_root)
+    if not r.stats.get("positions"):
+        raise ValueError(
+            f"index at {index_root} was built without store_positions=True"
+        )
+    return r
+
+
+def _ranked(
+    r: IndexReader, terms: Sequence[str], buckets, scorer, tomb_shards,
+    k: int | None, shards: Sequence[int] | None = None,
+) -> DataFrame:
+    """Run a per-shard span scorer over ``terms``' blocks (optionally only
+    ``shards``) and rank (score desc, docid asc), top ``k`` or all."""
+    blocks = r.blocks(terms, buckets)
+    if shards is not None:
+        blocks = blocks.filter(F.col("shard").isin([int(s) for s in shards]))
+    out = _apply_scorer(
+        blocks, scorer, tomb_shards, schema=_PHRASE_SCHEMA
+    ).orderBy(F.desc("score"), F.asc("docid"))
+    return out.limit(k) if k is not None else out
 
 
 def _sorted_member(sorted_arr: np.ndarray, probes: np.ndarray) -> np.ndarray:
@@ -205,7 +232,7 @@ def _phrase_shard_scorer(
         order = np.argsort(doc_arr, kind="stable")
         dl = len_arr[order][np.searchsorted(doc_arr[order], docids)].astype(np.float64)
         ptf = ptf.astype(np.float64)
-        s = sum_idf * ptf * (k1 + 1.0) / (ptf + k1 * (1.0 - b + b * dl / avgdl))
+        s = bm25(sum_idf, ptf, dl, avgdl, k1, b)
         return pd.DataFrame(
             {"docid": docids, "phrase_tf": ptf.astype(np.int64), "score": s}
         )
@@ -245,62 +272,35 @@ def phrase_match(
     docid set (rescore's window): matches outside the listed shards are NOT
     returned, so plain phrase search must leave it None.
     """
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    if not stats.get("positions"):
-        raise ValueError(
-            f"index at {index_root} was built without store_positions=True"
-        )
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
-    from es_indexer_spark.query.engine import _tomb_mode
-
-    tomb, tomb_shards = _tomb_mode(spark, vdir, int(stats["shard_size"]))
-
-    from es_indexer_spark.analysis.tokenizer import split_lang_marker
+    r = _positional(spark, index_root)
+    tomb, tomb_shards = r.tombs()
 
     # the code chain appends a lang:<x> marker as the LAST token — it is a
     # lang-filter term, never a phrase position (it sits at the end of every
     # doc's stream, so chaining it would silently match nothing)
     terms, marker = split_lang_marker(
-        tokenize_one(phrase, stats["tokenizer"], lang=lang)
+        tokenize_one(phrase, r.tokenizer, lang=lang)
     )
     if not terms:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
+        return empty_scores(spark, _PHRASE_SCHEMA)
 
     uniq = sorted(set(terms) | ({marker} if marker else set()))
-    from es_indexer_spark.query.engine import _dict_lookup
-
-    dict_rows = _dict_lookup(spark, vdir, uniq)
-    found = {r["term"]: r for r in dict_rows}
+    found = {row["term"]: row for row in r.lookup(uniq)}
     if any(t not in found for t in uniq):  # conjunctive: a missing term → no match
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
+        return empty_scores(spark, _PHRASE_SCHEMA)
     # Lucene PhraseQuery idf: sum of the individual term idfs (duplicate terms in
     # the phrase each contribute — Lucene sums over phrase positions); the lang
     # marker is filter context and does not score
-    sum_idf = float(sum(lucene_idf(n_docs, found[t]["df"]) for t in terms))
-    buckets = sorted({r["bucket"] for r in dict_rows})
-
-    from es_indexer_spark.query.engine import _postings_df
-
-    blocks = _postings_df(spark, vdir).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
-    )
-    if shards is not None:
-        blocks = blocks.filter(F.col("shard").isin([int(s) for s in shards]))
-    from es_indexer_spark.query.engine import _apply_scorer
-
-    scored = _apply_scorer(
-        blocks,
+    sum_idf = float(sum(lucene_idf(r.n_docs, found[t]["df"]) for t in terms))
+    buckets = sorted({row["bucket"] for row in found.values()})
+    return _ranked(
+        r, uniq, buckets,
         _phrase_shard_scorer(
-            terms, sum_idf, k1, b, avgdl, tomb,
+            terms, sum_idf, r.k1, r.b, r.avgdl, tomb,
             filter_term=marker, slop=int(slop),
         ),
-        tomb_shards,
-        schema=_PHRASE_SCHEMA,
+        tomb_shards, k, shards,
     )
-    out = scored.orderBy(F.desc("score"), F.asc("docid"))
-    return out.limit(k) if k is not None else out
 
 
 def span_near(
@@ -331,27 +331,16 @@ def span_near(
     Reference anchor: the portal's phrase surface
     (geonetwork4-api/.../GeoNetworkServiceImpl.java:114-120) inherits ES
     ``match_phrase``/``span_near``; Lucene semantics are public."""
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    if not stats.get("positions"):
-        raise ValueError(
-            f"index at {index_root} was built without store_positions=True"
-        )
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
-    from es_indexer_spark.query.engine import _tomb_mode
-
-    tomb, tomb_shards = _tomb_mode(spark, vdir, int(stats["shard_size"]))
-    from es_indexer_spark.analysis.tokenizer import split_lang_marker
-
+    r = _positional(spark, index_root)
+    tomb, tomb_shards = r.tombs()
     terms: list[str] = []
     marker = None
     for c in clauses:
-        ts, m = split_lang_marker(tokenize_one(c, stats["tokenizer"], lang=lang))
+        ts, m = split_lang_marker(tokenize_one(c, r.tokenizer, lang=lang))
         terms.extend(ts)
         marker = marker or m
     if not terms:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
+        return empty_scores(spark, _PHRASE_SCHEMA)
 
     orders: list[list[int]] | None = None
     if not in_order and len(terms) > 1:
@@ -373,31 +362,20 @@ def span_near(
                 orders.append(list(p))
 
     uniq = sorted(set(terms) | ({marker} if marker else set()))
-    from es_indexer_spark.query.engine import _dict_lookup
-
-    dict_rows = _dict_lookup(spark, vdir, uniq)
-    found = {r["term"]: r for r in dict_rows}
+    found = {row["term"]: row for row in r.lookup(uniq)}
     if any(t not in found for t in uniq):
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
-    sum_idf = float(sum(lucene_idf(n_docs, found[t]["df"]) for t in terms))
-    buckets = sorted({r["bucket"] for r in dict_rows})
-    from es_indexer_spark.query.engine import _apply_scorer, _postings_df
-
-    blocks = _postings_df(spark, vdir).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
-    )
-    scored = _apply_scorer(
-        blocks,
+        return empty_scores(spark, _PHRASE_SCHEMA)
+    sum_idf = float(sum(lucene_idf(r.n_docs, found[t]["df"]) for t in terms))
+    buckets = sorted({row["bucket"] for row in found.values()})
+    return _ranked(
+        r, uniq, buckets,
         _phrase_shard_scorer(
-            terms, sum_idf, k1, b, avgdl, tomb,
+            terms, sum_idf, r.k1, r.b, r.avgdl, tomb,
             filter_term=marker, slop=int(slop), orders=orders,
             first_end=int(first_end) if first_end is not None else None,
         ),
-        tomb_shards,
-        schema=_PHRASE_SCHEMA,
+        tomb_shards, k,
     )
-    out = scored.orderBy(F.desc("score"), F.asc("docid"))
-    return out.limit(k) if k is not None else out
 
 
 def span_first(
@@ -509,7 +487,7 @@ def _mpp_shard_scorer(
         order = np.argsort(doc_arr, kind="stable")
         dl = len_arr[order][np.searchsorted(doc_arr[order], docids)].astype(np.float64)
         ptf_f = ptf.astype(np.float64)
-        s = sum_idf * ptf_f * (k1 + 1.0) / (ptf_f + k1 * (1.0 - b + b * dl / avgdl))
+        s = bm25(sum_idf, ptf_f, dl, avgdl, k1, b)
         return pd.DataFrame(
             {"docid": docids, "phrase_tf": ptf.astype(np.int64), "score": s}
         )
@@ -543,75 +521,49 @@ def match_phrase_prefix(
     Execution = the phrase path: one dictionary lookup (prefix row-group
     range), one pruned postings scan, per-shard vectorized key-chain merge,
     global top-k."""
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    if not stats.get("positions"):
-        raise ValueError(
-            f"index at {index_root} was built without store_positions=True"
-        )
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
-    from es_indexer_spark.query.engine import _tomb_mode
-
+    r = _positional(spark, index_root)
+    n_docs = r.n_docs
     # past DISTRIBUTED_TOMB_THRESHOLD the delete set cogroups with the blocks
     # (shard-keyed, one shared shuffle) instead of a driver-collected array
-    tomb, tomb_shards = _tomb_mode(spark, vdir, int(stats["shard_size"]))
-    from es_indexer_spark.analysis.tokenizer import split_lang_marker
+    tomb, tomb_shards = r.tombs()
 
     # the lang marker is the code chain's LAST token — without the split it
     # would be mistaken for the user's prefix (and the real prefix demoted
     # to an exact term); it acts as a required filter term instead
-    toks, marker = split_lang_marker(
-        tokenize_one(query, stats["tokenizer"], lang=lang)
-    )
+    toks, marker = split_lang_marker(tokenize_one(query, r.tokenizer, lang=lang))
     if not toks:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
+        return empty_scores(spark, _PHRASE_SCHEMA)
     fixed, prefix = toks[:-1], toks[-1]
 
-    from es_indexer_spark.query.engine import _dict_df
-
-    d = _dict_df(spark, vdir)
     exp_rows = (
-        d.filter(F.col("term").startswith(prefix))
+        r.dict_df().filter(F.col("term").startswith(prefix))
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(max_expansions)
         .collect()
     )
     if not exp_rows:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
+        return empty_scores(spark, _PHRASE_SCHEMA)
     uniq_fixed = sorted(set(fixed) | ({marker} if marker else set()))
-    fixed_rows = (
-        d.filter(F.col("term").isin(uniq_fixed)).collect() if uniq_fixed else []
-    )
-    found = {r["term"]: r for r in fixed_rows}
+    fixed_rows = r.lookup(uniq_fixed)
+    found = {row["term"]: row for row in fixed_rows}
     if any(t not in found for t in uniq_fixed):
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
-    union_df = min(n_docs, sum(r["df"] for r in exp_rows))
+        return empty_scores(spark, _PHRASE_SCHEMA)
+    union_df = min(n_docs, sum(row["df"] for row in exp_rows))
     sum_idf = float(
         sum(lucene_idf(n_docs, found[t]["df"]) for t in fixed)
         + lucene_idf(n_docs, union_df)
     )
-    expansions = sorted(r["term"] for r in exp_rows)
+    expansions = sorted(row["term"] for row in exp_rows)
     all_terms = sorted(set(uniq_fixed) | set(expansions))
     buckets = sorted(
-        {r["bucket"] for r in fixed_rows} | {r["bucket"] for r in exp_rows}
+        {row["bucket"] for row in fixed_rows} | {row["bucket"] for row in exp_rows}
     )
-    from es_indexer_spark.query.engine import _postings_df
-
-    blocks = _postings_df(spark, vdir).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(all_terms)
-    )
-    from es_indexer_spark.query.engine import _apply_scorer
-
-    scored = _apply_scorer(
-        blocks,
-        _mpp_shard_scorer(fixed, expansions, sum_idf, k1, b, avgdl, tomb,
+    return _ranked(
+        r, all_terms, buckets,
+        _mpp_shard_scorer(fixed, expansions, sum_idf, r.k1, r.b, r.avgdl, tomb,
                           filter_term=marker),
-        tomb_shards,
-        schema=_PHRASE_SCHEMA,
+        tomb_shards, k,
     )
-    out = scored.orderBy(F.desc("score"), F.asc("docid"))
-    return out.limit(k) if k is not None else out
 
 
 def _span_or_shard_scorer(terms: list[str], sum_idf: float, k1, b, avgdl, tomb):
@@ -646,7 +598,7 @@ def _span_or_shard_scorer(terms: list[str], sum_idf: float, k1, b, avgdl, tomb):
         uniq, start = np.unique(docs, return_index=True)
         ptf = np.add.reduceat(tfs, start).astype(np.float64)
         dl = lens[start].astype(np.float64)
-        s = sum_idf * ptf * (k1 + 1.0) / (ptf + k1 * (1.0 - b + b * dl / avgdl))
+        s = bm25(sum_idf, ptf, dl, avgdl, k1, b)
         return pd.DataFrame(
             {"docid": uniq, "phrase_tf": ptf.astype(np.int64), "score": s}
         )
@@ -668,46 +620,24 @@ def span_or(
     clauses, scored with the combined SpanWeight (sum of clause idfs), the
     public Lucene SpanOrQuery behavior. One pruned postings scan over the
     clause terms' buckets; the per-shard combine is pure numpy reduceat."""
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
-    from es_indexer_spark.query.engine import (
-        _apply_scorer,
-        _dict_lookup,
-        _postings_df,
-        _tomb_mode,
-    )
-
-    tomb, tomb_shards = _tomb_mode(spark, vdir, int(stats["shard_size"]))
+    r = open_index(spark, index_root)
+    tomb, tomb_shards = r.tombs()
     terms = sorted(
-        {
-            t
-            for c in clauses
-            for t in tokenize_one(c, stats["tokenizer"], lang=lang)
-        }
+        {t for c in clauses for t in tokenize_one(c, r.tokenizer, lang=lang)}
     )
-    if not terms:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
-    dict_rows = [r for r in _dict_lookup(spark, vdir, terms) if r is not None]
+    dict_rows = r.lookup(terms)
     if not dict_rows:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
+        return empty_scores(spark, _PHRASE_SCHEMA)
     # absent clauses contribute nothing (disjunction) but keep their weight
     # out of the sum — Lucene computes the SimWeight over the FOUND terms
-    sum_idf = float(sum(lucene_idf(n_docs, r["df"]) for r in dict_rows))
-    buckets = sorted({r["bucket"] for r in dict_rows})
-    found = sorted({r["term"] for r in dict_rows})
-    blocks = _postings_df(spark, vdir).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(found)
+    sum_idf = float(sum(lucene_idf(r.n_docs, row["df"]) for row in dict_rows))
+    buckets = sorted({row["bucket"] for row in dict_rows})
+    found = sorted({row["term"] for row in dict_rows})
+    return _ranked(
+        r, found, buckets,
+        _span_or_shard_scorer(found, sum_idf, r.k1, r.b, r.avgdl, tomb),
+        tomb_shards, k,
     )
-    scored = _apply_scorer(
-        blocks,
-        _span_or_shard_scorer(found, sum_idf, k1, b, avgdl, tomb),
-        tomb_shards,
-        schema=_PHRASE_SCHEMA,
-    )
-    out = scored.orderBy(F.desc("score"), F.asc("docid"))
-    return out.limit(k) if k is not None else out
 
 
 def _span_not_shard_scorer(
@@ -766,7 +696,7 @@ def _span_not_shard_scorer(
         order = np.argsort(docs, kind="stable")
         dl = lens[order][np.searchsorted(docs[order], docids)].astype(np.float64)
         ptf = ptf.astype(np.float64)
-        s = idf * ptf * (k1 + 1.0) / (ptf + k1 * (1.0 - b + b * dl / avgdl))
+        s = bm25(idf, ptf, dl, avgdl, k1, b)
         return pd.DataFrame(
             {"docid": docids, "phrase_tf": ptf.astype(np.int64), "score": s}
         )
@@ -793,48 +723,27 @@ def span_not(
     ``(docid, phrase_tf, score)``; phrase_tf = surviving include occurrences,
     scored by the include term's BM25 weight (the SpanNot weight is the
     include span's, Lucene semantics — the exclusion only drops spans)."""
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    if not stats.get("positions"):
-        raise ValueError(
-            f"index at {index_root} was built without store_positions=True"
-        )
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
-    from es_indexer_spark.query.engine import (
-        _apply_scorer,
-        _dict_lookup,
-        _postings_df,
-        _tomb_mode,
-    )
-
-    tomb, tomb_shards = _tomb_mode(spark, vdir, int(stats["shard_size"]))
-    inc_terms = tokenize_one(include, stats["tokenizer"], lang=lang)
-    exc_terms = tokenize_one(exclude, stats["tokenizer"], lang=lang)
+    r = _positional(spark, index_root)
+    tomb, tomb_shards = r.tombs()
+    inc_terms = tokenize_one(include, r.tokenizer, lang=lang)
+    exc_terms = tokenize_one(exclude, r.tokenizer, lang=lang)
     if len(inc_terms) != 1 or len(exc_terms) != 1:
         raise ValueError("span_not wraps single-term spans on each side")
     inc, exc = inc_terms[0], exc_terms[0]
     if inc == exc:
         raise ValueError("include and exclude must differ")
-    dict_rows = _dict_lookup(spark, vdir, sorted({inc, exc}))
-    found = {r["term"]: r for r in dict_rows}
+    found = {row["term"]: row for row in r.lookup(sorted({inc, exc}))}
     if inc not in found:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
-    idf = float(lucene_idf(n_docs, found[inc]["df"]))
-    buckets = sorted({r["bucket"] for r in dict_rows})
-    blocks = _postings_df(spark, vdir).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(sorted(found))
-    )
-    scored = _apply_scorer(
-        blocks,
+        return empty_scores(spark, _PHRASE_SCHEMA)
+    idf = float(lucene_idf(r.n_docs, found[inc]["df"]))
+    buckets = sorted({row["bucket"] for row in found.values()})
+    return _ranked(
+        r, sorted(found), buckets,
         _span_not_shard_scorer(
-            inc, exc, idf, k1, b, avgdl, tomb, int(pre), int(post)
+            inc, exc, idf, r.k1, r.b, r.avgdl, tomb, int(pre), int(post)
         ),
-        tomb_shards,
-        schema=_PHRASE_SCHEMA,
+        tomb_shards, k,
     )
-    out = scored.orderBy(F.desc("score"), F.asc("docid"))
-    return out.limit(k) if k is not None else out
 
 
 def _span_multi_scorer(
@@ -923,7 +832,7 @@ def _span_multi_scorer(
         order = np.argsort(doc_arr, kind="stable")
         dl = len_arr[order][np.searchsorted(doc_arr[order], docids)].astype(np.float64)
         ptf_f = ptf.astype(np.float64)
-        s = sum_idf * ptf_f * (k1 + 1.0) / (ptf_f + k1 * (1.0 - b + b * dl / avgdl))
+        s = bm25(sum_idf, ptf_f, dl, avgdl, k1, b)
         return pd.DataFrame(
             {"docid": docids, "phrase_tf": ptf.astype(np.int64), "score": s}
         )
@@ -960,28 +869,12 @@ def span_multi_near(
     (O(max_expansions) rows), one pruned postings scan over all slot terms,
     per-shard union-merge + the vectorized greedy chain. ``in_order=False``
     unions the distinct slot permutations (<= 6 slots, as span_near)."""
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    if not stats.get("positions"):
-        raise ValueError(
-            f"index at {index_root} was built without store_positions=True"
-        )
-    n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    k1, b = stats["k1"], stats["b"]
-    from es_indexer_spark.query.engine import (
-        _apply_scorer,
-        _dict_df,
-        _dict_lookup,
-        _postings_df,
-        _tomb_mode,
-    )
-    from es_indexer_spark.analysis.tokenizer import split_lang_marker
-
-    tomb, tomb_shards = _tomb_mode(spark, vdir, int(stats["shard_size"]))
+    r = _positional(spark, index_root)
+    n_docs = r.n_docs
+    tomb, tomb_shards = r.tombs()
 
     slots: list[list[str]] = []
     slot_dfs: list[float] = []
-    d = None
     for c in clauses:
         if c.endswith("*") and len(c) > 1:
             body = c[:-1]
@@ -989,39 +882,33 @@ def span_multi_near(
                 raise ValueError(
                     "span_multi supports a single trailing * prefix"
                 )
-            ts, _m = split_lang_marker(
-                tokenize_one(body, stats["tokenizer"], lang=lang)
-            )
+            ts, _m = split_lang_marker(tokenize_one(body, r.tokenizer, lang=lang))
             if len(ts) != 1:
                 raise ValueError(
                     f"a span_multi prefix must analyze to one token, got {ts!r}"
                 )
-            if d is None:
-                d = _dict_df(spark, vdir)
             rows = (
-                d.filter(F.col("term").startswith(ts[0]))
+                r.dict_df().filter(F.col("term").startswith(ts[0]))
                 .orderBy(F.desc("df"), F.asc("term"))
                 .limit(int(max_expansions))
                 .collect()
             )
             if not rows:
-                return spark.createDataFrame([], _PHRASE_SCHEMA)
-            slots.append(sorted(r["term"] for r in rows))
-            slot_dfs.append(float(min(n_docs, sum(r["df"] for r in rows))))
+                return empty_scores(spark, _PHRASE_SCHEMA)
+            slots.append(sorted(row["term"] for row in rows))
+            slot_dfs.append(float(min(n_docs, sum(row["df"] for row in rows))))
         else:
-            ts, _m = split_lang_marker(
-                tokenize_one(c, stats["tokenizer"], lang=lang)
-            )
+            ts, _m = split_lang_marker(tokenize_one(c, r.tokenizer, lang=lang))
             for t in ts:
                 slots.append([t])
                 slot_dfs.append(-1.0)  # resolved from the dict below
     if not slots:
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
+        return empty_scores(spark, _PHRASE_SCHEMA)
 
     lit_terms = sorted({s[0] for s, df_ in zip(slots, slot_dfs) if df_ < 0})
-    found = {r["term"]: r for r in _dict_lookup(spark, vdir, lit_terms)}
+    found = {row["term"]: row for row in r.lookup(lit_terms)}
     if any(t not in found for t in lit_terms):
-        return spark.createDataFrame([], _PHRASE_SCHEMA)
+        return empty_scores(spark, _PHRASE_SCHEMA)
     sum_idf = 0.0
     for s, df_ in zip(slots, slot_dfs):
         sum_idf += lucene_idf(
@@ -1044,21 +931,14 @@ def span_multi_near(
                 seen.add(key)
                 orders.append(list(p))
 
-    all_terms = sorted({t for s in slots for t in s})
-    dict_rows = _dict_lookup(spark, vdir, all_terms)
-    buckets = sorted({r["bucket"] for r in dict_rows})
-    present = sorted({r["term"] for r in dict_rows})
-    blocks = _postings_df(spark, vdir).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(present)
-    )
-    scored = _apply_scorer(
-        blocks,
+    dict_rows = r.lookup(sorted({t for s in slots for t in s}))
+    buckets = sorted({row["bucket"] for row in dict_rows})
+    present = sorted({row["term"] for row in dict_rows})
+    return _ranked(
+        r, present, buckets,
         _span_multi_scorer(
-            slots, float(sum_idf), k1, b, avgdl, tomb,
+            slots, float(sum_idf), r.k1, r.b, r.avgdl, tomb,
             slop=int(slop), orders=orders,
         ),
-        tomb_shards,
-        schema=_PHRASE_SCHEMA,
+        tomb_shards, k,
     )
-    out = scored.orderBy(F.desc("score"), F.asc("docid"))
-    return out.limit(k) if k is not None else out

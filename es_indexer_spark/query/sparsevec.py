@@ -13,7 +13,7 @@ Execution shape (same scale story as :func:`query.engine.topk`): one
 dictionary point-lookup for the |q| tokens (memoized, zero Spark jobs when
 warm), ONE term-pruned postings scan, per-shard vectorized decode + weighted
 ``bincount`` in an Arrow stage, distributed top-k merge. Tombstones flow
-through the same ``_tomb_mode`` seam as the ranked path (driver array below
+through the same index-reader tombstone seam as the ranked path (driver array below
 the threshold, shard-keyed cogroup above it).
 
 Query-token pruning reproduces ES's documented ``pruning_config`` rule
@@ -30,7 +30,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from es_indexer_spark.index import catalog
+from es_indexer_spark.index.reader import open_index
+from es_indexer_spark.query.engine import _apply_scorer, empty_scores
 
 
 def _sparse_scorer(weights: dict[str, float], k: int, tomb, after=None):
@@ -122,21 +123,14 @@ def sparse_vector_topk(
     expansion model's output) to weights; unknown tokens cost one memoized
     dictionary miss each and contribute nothing, like ES. ``k=None``
     returns every match distributed (filter/hybrid composition)."""
-    from es_indexer_spark.query.engine import (
-        _SCORE_SCHEMA, _apply_scorer, _dict_lookup, _load_blocks, _tomb_mode,
-    )
-
     if not weights:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    tomb, tomb_shards = _tomb_mode(spark, vdir, int(stats["shard_size"]))
-
-    qterms = sorted(weights)
-    dict_rows = _dict_lookup(spark, vdir, qterms)
+        return empty_scores(spark)
+    r = open_index(spark, index_root)
+    tomb, tomb_shards = r.tombs()
+    dict_rows = r.lookup(sorted(weights))
     if not dict_rows:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
-    dfs = {r["term"]: float(r["df"]) for r in dict_rows}
+        return empty_scores(spark)
+    dfs = {row["term"]: float(row["df"]) for row in dict_rows}
     wts = {t: float(w) for t, w in weights.items() if t in dfs}
     if prune:
         wts = prune_tokens(
@@ -145,14 +139,13 @@ def sparse_vector_topk(
             tokens_weight_threshold=tokens_weight_threshold,
         )
     if not wts:
-        return spark.createDataFrame([], _SCORE_SCHEMA)
-    present = sorted(wts)
-    buckets = sorted({r["bucket"] for r in dict_rows if r["term"] in wts})
-
-    blocks = _load_blocks(spark, vdir, present, buckets)
+        return empty_scores(spark)
+    buckets = sorted({row["bucket"] for row in dict_rows if row["term"] in wts})
     shard_k = (1 << 62) if k is None else k
     scored = _apply_scorer(
-        blocks, _sparse_scorer(wts, shard_k, tomb, after), tomb_shards
+        r.blocks(sorted(wts), buckets),
+        _sparse_scorer(wts, shard_k, tomb, after),
+        tomb_shards,
     )
     out = scored.orderBy(F.desc("score"), F.asc("docid"))
     return out if k is None else out.limit(k)

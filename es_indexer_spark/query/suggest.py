@@ -31,15 +31,14 @@ import re as _re
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from es_indexer_spark.analysis.tokenizer import shingle_udf
-from es_indexer_spark.index import catalog
+from es_indexer_spark.index.reader import IndexReader, open_index
 
 
 def suggest_prefix(
     spark: SparkSession, index_root: str, prefix: str, k: int = 10
 ) -> DataFrame:
     """Top-k dictionary terms completing ``prefix``, ranked by cf desc, term asc."""
-    vdir = catalog.resolve(index_root)
-    d = spark.read.parquet(os.path.join(vdir, "dict"))
+    d = spark.read.parquet(os.path.join(open_index(spark, index_root).vdir, "dict"))
     p = prefix.lower()
     return (
         d.filter(F.col("term").startswith(p))
@@ -72,8 +71,9 @@ def build_completion_contexts(
     pruning for the prefix scan). Returns the artifact path."""
     from es_indexer_spark.analysis.tokenizer import get_term_stats_udf
 
-    vdir = catalog.resolve(index_root)
-    out_dir = os.path.join(vdir, f"completion_ctx_{context_col}")
+    out_dir = os.path.join(
+        open_index(spark, index_root).vdir, f"completion_ctx_{context_col}"
+    )
     ts_udf = get_term_stats_udf(tokenizer)
     if tokenizer == "code":
         lang_expr = (
@@ -120,8 +120,9 @@ def suggest_prefix_ctx(
     Needs :func:`build_completion_contexts` to have run for ``context_col``
     on the CURRENT version — raises by name otherwise. The context filter is
     partition pruning, the prefix a pushed StringStartsWith."""
-    vdir = catalog.resolve(index_root)
-    path = os.path.join(vdir, f"completion_ctx_{context_col}")
+    path = os.path.join(
+        open_index(spark, index_root).vdir, f"completion_ctx_{context_col}"
+    )
     if not os.path.isdir(path):
         raise FileNotFoundError(
             f"no completion-context artifact for {context_col!r} — run "
@@ -180,8 +181,7 @@ def suggest_fuzzy(
     The distance has no Spark built-in, so the exact window minimum runs in
     one Arrow stage over candidates pre-pruned JVM-side by
     ``levenshtein <= 2*fuzziness`` (sound: ``lev <= 2*damerau``)."""
-    vdir = catalog.resolve(index_root)
-    d = spark.read.parquet(os.path.join(vdir, "dict"))
+    d = spark.read.parquet(os.path.join(open_index(spark, index_root).vdir, "dict"))
     p = prefix.lower()
     f = int(fuzziness) if len(p) >= int(min_fuzzy_length) else 0
     if f == 0:
@@ -220,9 +220,7 @@ def suggest_fuzzy(
     )
 
 
-def _expansion_docids(
-    spark: SparkSession, vdir: str, exp_rows, k: int
-) -> DataFrame:
+def _expansion_docids(r: IndexReader, exp_rows, k: int) -> DataFrame:
     """Shared tail of the multi-term constant-score rewrites (prefix /
     wildcard): docs containing ANY of the expanded dictionary terms,
     constant score 1.0, docid-ordered, top-k.
@@ -235,14 +233,14 @@ def _expansion_docids(
     import pandas as pd
 
     from es_indexer_spark.index.codec import decode_block
-    from es_indexer_spark.index.tombstones import live_mask, tombstone_array
-    from es_indexer_spark.query.engine import _load_blocks
+    from es_indexer_spark.index.tombstones import live_mask
+    from es_indexer_spark.query.engine import empty_scores
 
     if not exp_rows:
-        return spark.createDataFrame([], "docid long, score double")
-    terms = sorted(r["term"] for r in exp_rows)
-    buckets = sorted({r["bucket"] for r in exp_rows})
-    tomb = tombstone_array(spark, vdir)
+        return empty_scores(r.spark)
+    terms = sorted(row["term"] for row in exp_rows)
+    buckets = sorted({row["bucket"] for row in exp_rows})
+    tomb = r.tomb_array()
 
     def docids(it):
         for pdf in it:
@@ -264,7 +262,7 @@ def _expansion_docids(
             )
             yield pd.DataFrame({"docid": u})
 
-    hits = _load_blocks(spark, vdir, terms, buckets).mapInPandas(
+    hits = r.blocks(terms, buckets).mapInPandas(
         docids, "docid long"
     )
     return (
@@ -289,20 +287,18 @@ def prefix_query(
     scale), then return docs containing ANY expansion, constant score 1.0,
     docid-ordered. The dict prefix scan is a contiguous row-group range of
     the term-sorted parquet."""
-    from es_indexer_spark.query.engine import _dict_df
-
-    vdir = catalog.resolve(index_root)
+    r = open_index(spark, index_root)
     p = prefix.lower()
-    # the engine's per-version persisted dictionary (same serving cache the
+    # the reader's per-version persisted dictionary (same serving cache the
     # ranked/fuzzy paths use — a cold call still pushes the scan to parquet)
     exp = (
-        _dict_df(spark, vdir)
+        r.dict_df()
         .filter(F.col("term").startswith(p))
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(max_expansions)
         .collect()
     )
-    return _expansion_docids(spark, vdir, exp, k)
+    return _expansion_docids(r, exp, k)
 
 
 def wildcard_pattern_to_regex(pattern: str) -> str:
@@ -336,11 +332,9 @@ def wildcard_query(
     pushed, but every row-group). A leading literal prefix is extracted and
     pushed as a ``startswith`` range so ``spa*k?`` style patterns keep the
     contiguous row-group pruning of the prefix path."""
-    from es_indexer_spark.query.engine import _dict_df
-
     p = pattern.lower()
-    vdir = catalog.resolve(index_root)
-    d = _dict_df(spark, vdir)
+    r = open_index(spark, index_root)
+    d = r.dict_df()
     # push the literal prefix (chars before the first wildcard) as a range
     lit = _re.match(r"^[^*?]*", p).group(0)
     if lit:
@@ -351,7 +345,7 @@ def wildcard_query(
         .limit(max_expansions)
         .collect()
     )
-    return _expansion_docids(spark, vdir, exp, k)
+    return _expansion_docids(r, exp, k)
 
 
 _LUCENE_RE_UNSUPPORTED = set("~&<>#")
@@ -408,20 +402,17 @@ def regexp_query(
     parquet (contiguous row-group scan); a pattern with no literal prefix is
     a full dict scan — exactly Lucene's automaton behavior, where only a
     common literal prefix prunes the terms enumeration."""
-    vdir = catalog.resolve(index_root)
-    exp = _regexp_expansion_rows(spark, vdir, pattern, max_expansions)
-    return _expansion_docids(spark, vdir, exp, k)
+    r = open_index(spark, index_root)
+    return _expansion_docids(r, _regexp_expansion_rows(r, pattern, max_expansions), k)
 
 
-def _regexp_expansion_rows(spark, vdir, pattern: str, max_expansions: int):
+def _regexp_expansion_rows(r: IndexReader, pattern: str, max_expansions: int):
     """Dictionary rows matching a Lucene regexp — the literal prefix before
     the first operator pushed as a startswith range over the term-sorted
     dict, top-``max_expansions`` by df (the top-terms rewrite)."""
-    from es_indexer_spark.query.engine import _dict_df
-
     p = pattern.lower()
     rx = lucene_regexp_to_java(p)
-    d = _dict_df(spark, vdir)
+    d = r.dict_df()
     lit = ""
     for ch in p:
         if ch in _LUCENE_RE_SPECIAL:
@@ -447,9 +438,10 @@ def regexp_expansions(
     ``/regex/`` construct in classic ``query_string`` lowers onto the bool
     engine's constant-score terms groups through this (Lucene's
     constant-score multi-term rewrite, same as the wildcard leaf)."""
-    vdir = catalog.resolve(index_root)
-    rows = _regexp_expansion_rows(spark, vdir, pattern, int(max_expansions))
-    return sorted(r["term"] for r in rows)
+    rows = _regexp_expansion_rows(
+        open_index(spark, index_root), pattern, int(max_expansions)
+    )
+    return sorted(row["term"] for row in rows)
 
 
 def phrase_suggestions(
@@ -615,9 +607,7 @@ def suggest_terms(
     Damerau distances have no Spark built-in, so they add one Arrow stage
     over candidates pre-pruned by ``levenshtein <= 2*max_edits``.
     Returns ``(input, term, edits, df)``."""
-    from es_indexer_spark.index import catalog as _catalog
     from es_indexer_spark.analysis.tokenizer import tokenize_one
-    from es_indexer_spark.query.engine import _dict_lookup
 
     if suggest_mode not in ("missing", "always", "popular"):
         raise ValueError(
@@ -635,30 +625,26 @@ def suggest_terms(
         "jaro_winkler": _jaro_winkler,
         "ngram": _ngram_similarity,
     }.get(string_distance)
-    vdir = _catalog.resolve(index_root)
-    stats = _catalog.read_stats(vdir)
+    r = open_index(spark, index_root)
     tokens = [
         t
-        for t in dict.fromkeys(tokenize_one(text, stats["tokenizer"]))
+        for t in dict.fromkeys(tokenize_one(text, r.tokenizer))
         if len(t) >= int(min_word_length)
     ]
     input_df: dict[str, int] = {}
     if suggest_mode == "missing":
-        present = {r["term"] for r in _dict_lookup(spark, vdir, tokens)}
+        present = {row["term"] for row in r.lookup(tokens)}
         tokens = [t for t in tokens if t not in present]
     elif suggest_mode == "popular":
         # one point lookup for the inputs' own df (absent -> 0); candidates
         # must beat it — the df bound pushes into the dict scan below
-        input_df = {
-            r["term"]: int(r["df"])
-            for r in _dict_lookup(spark, vdir, tokens)
-        }
+        input_df = {row["term"]: int(row["df"]) for row in r.lookup(tokens)}
     schema = "input string, term string, edits int, df long"
     if sim_fn is not None:
         schema += ", score double"
     if not tokens:
         return spark.createDataFrame([], schema)
-    d = spark.read.parquet(os.path.join(vdir, "dict"))
+    d = spark.read.parquet(os.path.join(r.vdir, "dict"))
     parts = []
     for tok in tokens:
         head = tok[: int(prefix_length)]
@@ -815,24 +801,20 @@ def suggest_phrase(
     from itertools import product
 
     from es_indexer_spark.analysis.tokenizer import split_lang_marker, tokenize_one
-    from es_indexer_spark.query.engine import _dict_lookup, _postings_df
 
-    vdir = catalog.resolve(index_root)
-    stats = catalog.read_stats(vdir)
-    if not stats.get("positions"):
+    r = open_index(spark, index_root)
+    if not r.stats.get("positions"):
         raise ValueError(
             f"index at {index_root} was built without store_positions=True "
             "(the phrase suggester measures bigram counts from positions)"
         )
-    tokens, _marker = split_lang_marker(
-        tokenize_one(text, stats["tokenizer"], lang=lang)
-    )
+    tokens, _marker = split_lang_marker(tokenize_one(text, r.tokenizer, lang=lang))
     schema = "suggestion string, score double"
     if not tokens:
         return spark.createDataFrame([], schema)
 
-    d = spark.read.parquet(os.path.join(vdir, "dict"))
-    own = {r["term"]: r for r in _dict_lookup(spark, vdir, sorted(set(tokens)))}
+    d = spark.read.parquet(os.path.join(r.vdir, "dict"))
+    own = {row["term"]: row for row in r.lookup(sorted(set(tokens)))}
     # candidates per position: (term, cf, prior)
     cands: list[list[tuple[str, int, float]]] = []
     for tok in tokens:
@@ -852,9 +834,9 @@ def suggest_phrase(
             .limit(int(candidates_per_term))
             .collect()
         )
-        for r in rows:
-            prior = 1.0 - r["edits"] / max(len(tok), len(r["term"]))
-            cl.append((r["term"], int(r["cf"]), prior))
+        for row in rows:
+            prior = 1.0 - row["edits"] / max(len(tok), len(row["term"]))
+            cl.append((row["term"], int(row["cf"]), prior))
         if not cl:
             return spark.createDataFrame([], schema)  # a position with no candidates
         cands.append(cl)
@@ -886,12 +868,10 @@ def suggest_phrase(
     big: dict[tuple[str, str], int] = {}
     if pairs:
         uniq_terms = sorted({t for p in pairs for t in p})
-        dict_rows = _dict_lookup(spark, vdir, uniq_terms)
-        buckets = sorted({r["bucket"] for r in dict_rows})
-        present = sorted({r["term"] for r in dict_rows})
-        blocks = _postings_df(spark, vdir).filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(present)
-        )
+        dict_rows = r.lookup(uniq_terms)
+        buckets = sorted({row["bucket"] for row in dict_rows})
+        present = sorted({row["term"] for row in dict_rows})
+        blocks = r.blocks(present, buckets)
         counted = (
             blocks.groupBy("shard")
             .applyInPandas(
@@ -902,8 +882,8 @@ def suggest_phrase(
             .agg(F.sum("cnt").alias("cnt"))
             .collect()
         )
-        for r in counted:
-            big[pairs[r["pair"]]] = int(r["cnt"])
+        for row in counted:
+            big[pairs[row["pair"]]] = int(row["cnt"])
 
     a = float(alpha)
 

@@ -12,7 +12,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from es_indexer_spark.index import catalog, driver_read
+from es_indexer_spark.index import catalog, driver_read, reader
 from es_indexer_spark.index.builder import build_index
 from es_indexer_spark.index.tombstones import delete_docs
 from es_indexer_spark.query import engine
@@ -45,7 +45,8 @@ def _jobs(spark, fn, group="driver-serving"):
 
 
 def test_topk_local_path_launches_no_job(spark, local_index):
-    engine._TERM_CACHE.clear()  # the dictionary read is a memo miss
+    # the dictionary read is a memo miss
+    reader.open_index(spark, local_index)._terms.clear()
     rows, n = _jobs(spark, lambda: topk(spark, local_index, QUERY, k=5).collect(),
                     "local-topk")
     assert rows and n == 0
@@ -98,7 +99,7 @@ def test_driver_reader_matches_spark_scan(spark, local_index):
     Spark's hidden files and returns the rows a Spark scan filters to."""
     vdir = catalog.resolve(local_index)
     pdir = os.path.join(vdir, "postings")
-    dict_rows = engine._dict_lookup(spark, vdir, ["data", "stream"])
+    dict_rows = reader.open_version(spark, vdir).lookup(["data", "stream"])
     buckets = {r["bucket"] for r in dict_rows}
     files = driver_read.data_files(pdir, buckets)
     assert files and all(

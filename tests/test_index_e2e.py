@@ -363,7 +363,7 @@ def test_topk_sorted_respects_deletes(spark, documents, tmp_path_factory):
 
 
 def test_term_cache_repeat_and_rebuild_invalidation(spark, documents, tmp_path_factory):
-    """_dict_lookup memoizes point lookups per index version: a repeated query
+    """The index reader memoizes point lookups per version: a repeated query
     is rank-identical (zero extra dict jobs), and a REBUILD into the same root
     (new dict mtime) must not serve stale df/bucket rows."""
     root = str(tmp_path_factory.mktemp("idx_tcache"))

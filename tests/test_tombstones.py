@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -218,6 +219,17 @@ def test_merge_carries_tombstones(spark, documents, tmp_path_factory):
 
     vdir = merge_indexes(spark, main_root, delta_root)
     offset = catalog.ckpt_read(vdir, "merge")["docid_offset"]
+    # each segment's (array-mode) delete set is carried as ONE driver-written
+    # file, not a Spark append's part files
+    carried = sorted(
+        f for f in os.listdir(os.path.join(vdir, "_tombstones"))
+        if f.endswith(".parquet")
+    )
+    assert len(carried) == 2, carried
+    assert sorted(
+        pq.read_table(os.path.join(vdir, "_tombstones", f))["docid"][0].as_py()
+        for f in carried
+    ) == sorted([dead_main, dead_delta + offset])
     merged_hits = {r["docid"] for r in
                    topk(spark, main_root, QUERY, k=50, use_blockmax=False).collect()}
     assert dead_main not in merged_hits

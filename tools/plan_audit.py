@@ -396,7 +396,7 @@ def main() -> int:
     ))
 
     # 15. fuzzy/prefix dictionary expansion: in production the dict is the
-    # engine's persisted per-version cache (_dict_df), so the StartsWith +
+    # index reader's persisted per-version dictionary (IndexReader.dict_df), so the StartsWith +
     # levenshtein filter applies on the InMemoryTableScan (and would push to
     # parquet on a cold read); levenshtein stays inside whole-stage codegen
     dict_df = spark.read.parquet(os.path.join(vdir, "dict"))
