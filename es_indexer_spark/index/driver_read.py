@@ -1,11 +1,12 @@
 """Small single-threaded parquet reads on the driver.
 
 The query engine serves small requests without a Spark job: the dictionary
-point read, the posting blocks of a low-volume query, and the tombstone set
-all go through the three functions here. Each opens one file at a time,
-skips row groups by the ``term`` column's min/max statistics (the dict and
-the posting blocks are written term-sorted), reads with ``use_threads=False``
-and filters rows with ``pc.is_in``.
+point read, the posting blocks of a low-volume query, the tombstone set and
+the docs columns a small bool's doc filters test all go through the
+functions here. Each opens one file at a time and reads with
+``use_threads=False``; term reads skip row groups by the ``term`` column's
+min/max statistics (the dict and the posting blocks are written
+term-sorted) and filter rows with ``pc.is_in``.
 
 Driver memory is the constraint: the Arrow dataset scanner
 (``pq.read_table(filters=...)`` / ``pyarrow.dataset``) grows the driver's
@@ -97,15 +98,46 @@ def read_terms(
     return parts[0] if len(parts) == 1 else pa.concat_tables(parts)
 
 
-def read_column(files: Sequence[str], column: str) -> np.ndarray:
-    """One column of every row of ``files`` as a numpy array."""
-    parts = []
+def read_columns(
+    files: Sequence[str], columns: Sequence[str]
+) -> dict[str, pa.ChunkedArray]:
+    """``columns`` of every row of ``files`` (at least one). The files must
+    agree on each column's type; Spark-written and driver-written files may
+    differ in nullability, so columns are joined chunk by chunk rather than
+    as tables."""
+    chunks: dict[str, list[pa.Array]] = {c: [] for c in columns}
+    types: dict[str, pa.DataType] = {}
     for path in files:
         with pq.ParquetFile(path) as pf:
-            parts.append(
-                pf.read(columns=[column], use_threads=False)[column].to_numpy()
-            )
-    return np.concatenate(parts) if parts else np.empty(0)
+            t = pf.read(columns=list(columns), use_threads=False)
+        for c in columns:
+            chunks[c].extend(t[c].chunks)
+            types[c] = t.schema.field(c).type
+    return {c: pa.chunked_array(v, type=types[c]) for c, v in chunks.items()}
+
+
+def read_column(files: Sequence[str], column: str) -> np.ndarray:
+    """One column of every row of ``files`` as a numpy array."""
+    if not files:
+        return np.empty(0)
+    return read_columns(files, [column])[column].to_numpy()
+
+
+def footer_types(files: Sequence[str]) -> tuple[dict[str, pa.DataType | None], int]:
+    """Each top-level column's Arrow type across ``files`` (None where a
+    file disagrees or lacks it) and Σ ``num_rows``, from the footers
+    alone."""
+    types: dict[str, pa.DataType | None] = {}
+    n = 0
+    for i, path in enumerate(files):
+        md = pq.read_metadata(path)
+        n += md.num_rows
+        got = {f.name: f.type for f in md.schema.to_arrow_schema()}
+        if i == 0:
+            types = got
+        else:
+            types = {c: t if got.get(c) == t else None for c, t in types.items()}
+    return types, n
 
 
 def count_rows(files: Sequence[str]) -> int:

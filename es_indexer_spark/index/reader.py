@@ -17,6 +17,9 @@ once and returns an :class:`IndexReader` that holds all of it:
   :meth:`~IndexReader.blocks`, :meth:`~IndexReader.docs`: Spark relations,
   built only when a Spark path asks for them (a driver-local query never
   lists the postings directory);
+- :meth:`~IndexReader.local_blocks`, :meth:`~IndexReader.local_docs`: the
+  same data read on the driver for a driver-local query, the docs footers
+  (types, row count) read once;
 - :meth:`~IndexReader.tombs` and :meth:`~IndexReader.live`: the delete set
   as a driver array below ``tombstones.DISTRIBUTED_TOMB_THRESHOLD`` and as
   shard-keyed Spark rows above it.
@@ -40,6 +43,7 @@ from collections.abc import Collection, Iterable, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 
 from es_indexer_spark.analysis.synonyms import expand_terms
@@ -98,6 +102,7 @@ class IndexReader:
         self._tomb_sig: tuple[str, ...] = ()
         self._tomb_n = 0
         self._tomb_arr: np.ndarray | None = None
+        self._docs_footer: tuple | None = None
 
     @property
     def stats(self) -> dict:
@@ -203,6 +208,19 @@ class IndexReader:
     def docs(self) -> DataFrame:
         """The docs store (docid-sorted; docid filters prune row groups)."""
         return self.spark.read.parquet(os.path.join(self.vdir, "docs"))
+
+    def docs_footer(self) -> tuple[list[str], dict[str, pa.DataType | None], int]:
+        """The docs store's files, column types (None where files disagree)
+        and row count, read from the footers once per version (a version's
+        docs are written with it and never change)."""
+        if self._docs_footer is None:
+            files = driver_read.data_files(os.path.join(self.vdir, "docs"))
+            self._docs_footer = (files, *driver_read.footer_types(files))
+        return self._docs_footer
+
+    def local_docs(self, columns: Sequence[str]) -> dict[str, pa.ChunkedArray]:
+        """``columns`` of every docs row, read on the driver."""
+        return driver_read.read_columns(self.docs_footer()[0], columns)
 
     # ---- tombstones -----------------------------------------------------------
     def _revalidate_tombs(self) -> None:

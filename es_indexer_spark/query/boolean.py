@@ -55,6 +55,7 @@ from es_indexer_spark.analysis.tokenizer import tokenize_one
 from es_indexer_spark.index.codec import bm25, decode_block, decode_positions
 from es_indexer_spark.index.reader import open_index
 from es_indexer_spark.query.bm25 import lucene_idf
+from es_indexer_spark.query.docfilter import DocPred, driver_masks
 from es_indexer_spark.index.tombstones import live_mask
 from es_indexer_spark.query.phrase import _chain_starts, _sorted_member
 
@@ -374,6 +375,34 @@ def _bool_shard_scorer(
     return score
 
 
+def _driver_doc_side(r, filters, masks, tomb, clauses=()) -> pd.DataFrame:
+    """The bool cogroup's right side built on the driver: the docs columns
+    the predicates test, read serially, tombstoned docids dropped (the
+    ``r.live`` step), then kind 0 the docs passing every filter (when there
+    are filters) and kind 2 + i the docs matching scored clause ``i``, each
+    row keyed by shard. ``masks`` are the filters' then the clauses' driver
+    forms (query/docfilter.py)."""
+    cols = r.local_docs(sorted({p.field for p in [*filters, *clauses]} | {"docid"}))
+    docid = cols["docid"].to_numpy().astype(np.int64)
+    live = live_mask(tomb, docid)
+    keep = np.ones(docid.size, dtype=bool) if live is None else live
+    parts, kinds = [], []
+    if filters:
+        m = keep
+        for f in masks[: len(filters)]:
+            m = m & f(cols)
+        parts.append(docid[m])
+        kinds.append(np.zeros(int(m.sum()), dtype=np.int64))
+    for i, f in enumerate(masks[len(filters):]):
+        m = keep & f(cols)
+        parts.append(docid[m])
+        kinds.append(np.full(int(m.sum()), 2 + i, dtype=np.int64))
+    d = np.concatenate(parts)
+    return pd.DataFrame(
+        {"shard": d // r.shard_size, "docid": d, "kind": np.concatenate(kinds)}
+    )
+
+
 def parse_minimum_should_match(spec: int | str, n_clauses: int) -> int:
     """ES/Lucene ``minimum_should_match`` spec resolution for simple specs
     (public Lucene ``Queries.calculateMinShouldMatch`` semantics):
@@ -498,7 +527,12 @@ def bool_query(
     (docid // shard_size) and COGROUP with the postings blocks — so the
     filter set flows shard-partitioned through the same single shuffle as
     the blocks, never through the driver or a broadcast, no matter how many
-    docs pass the range.
+    docs pass the range. Below the engine's posting-volume cutover (Σ df of
+    the present terms plus the docs rows, ``engine.LOCAL_MAX_POSTINGS``),
+    with driver-array tombstones and a driver form for every doc predicate
+    (query/docfilter.py), the driver reads the tested docs columns, builds
+    the same kind-tagged right side and runs the same cogroup scorer per
+    shard: zero Spark jobs.
 
     Round-5 clause broadening (the remaining ES bool leaf kinds):
 
@@ -778,110 +812,103 @@ def bool_query(
     const_t = sorted({t for g, _w in m_const + s_const for t in g})
     mphr_t = sorted({t for p, _w, _s in m_phr for t in p})
     sphr_t = sorted({t for p, _w, _s in s_phr for t in p})
-    rng_df = None
-    doc_preds = []
+    # doc-level predicates on stored fields: the non-scoring filter set
+    # (cogroup kind 0) and the SCORED range/exists clauses (kind 2 + i). Each
+    # lowers to the Column pushed into ONE docs-store scan and, where it is
+    # provably identical, to a driver mask (query/docfilter.py)
+    filters: list[DocPred] = []
     if filter_range is not None:
-        from es_indexer_spark.query.lookup import range_pred
-
         ranges = (
             filter_range if isinstance(filter_range, list) else [filter_range]
         )
-        for field, bounds in ranges:
-            doc_preds.append(range_pred(field, bounds))
-    for fld in filter_exists:
-        # ES bool.filter(exists): stored field non-null — same pushed scan
-        doc_preds.append(F.col(fld).isNotNull())
-    for fld, pat in filter_like:
-        # ES bool.filter(wildcard) on a STORED keyword field (ES SQL LIKE
-        # lowers here): the * / ? pattern compiles to an anchored regex
-        # evaluated inside the same pushed docs-store scan — case-SENSITIVE,
-        # ES's wildcard default (the indexed-content wildcard clause is the
-        # lowercased dictionary-expansion path; this one never touches the
-        # postings)
-        import re as _re
+        filters += [DocPred.range(field, bounds) for field, bounds in ranges]
+    # ES bool.filter(exists / wildcard / script / term / terms), stacked in
+    # the same scan: one scan, one cogroup set, however many filters stack
+    filters += [DocPred("exists", fld) for fld in filter_exists]
+    filters += [DocPred("like", fld, pat) for fld, pat in filter_like]
+    filters += [DocPred("script", None, src) for src in filter_script]
+    filters += [DocPred.term(fld, val) for fld, val in filter_fields]
+    # scored clauses: (required, boost, predicate)
+    sdc: list[tuple[bool, float, DocPred]] = []
+    for required, entries in ((True, must_ranges), (False, should_ranges)):
+        for entry in entries:
+            boost = float(entry[2]) if len(entry) > 2 else 1.0
+            sdc.append((required, boost, DocPred.range(entry[0], entry[1])))
+    for required, entries in ((True, must_exists), (False, should_exists)):
+        for entry in entries:
+            fld, bst = (
+                (entry, 1.0) if isinstance(entry, str)
+                else (entry[0], float(entry[1]))
+            )
+            sdc.append((required, bst, DocPred("exists", fld)))
+    doc_preds = filters + [p_ for _r, _b, p_ in sdc]
+    masks = driver_masks(doc_preds, r.docs_footer()[1]) if doc_preds else None
 
-        rx = "^" + "".join(
-            ".*" if ch == "*" else "." if ch == "?" else _re.escape(ch)
-            for ch in str(pat)
-        ) + "$"
-        doc_preds.append(F.col(fld).rlike(rx))
-    for src in filter_script:
-        # ES bool.filter(script): a Catalyst boolean expression over the
-        # STORED columns in the Painless slot (same translation stance as
-        # runtime_mappings / lookup.script_query) — pushed into the one
-        # docs-store scan with the other doc-level filters. This is also
-        # where the ES SQL layer lands non-scoring negations and
-        # disjunctions (NOT x, a OR b over fields): one predicate, one scan,
-        # SQL three-valued semantics (NULL never matches).
-        doc_preds.append(F.expr(str(src)))
-    for fld, val in filter_fields:
-        # ES bool.filter(term) on a stored keyword field — equality pushed
-        # into the same docs-store scan as the range bounds (one scan, one
-        # cogroup set, no matter how many doc-level filters stack); a LIST
-        # value is the ES bool.filter(terms) shape — membership, same scan
-        if isinstance(val, (list, tuple, set, frozenset)):
-            doc_preds.append(F.col(fld).isin(list(val)))
-        else:
-            doc_preds.append(F.col(fld) == F.lit(val))
-    if doc_preds:
-        pred = doc_preds[0]
-        for p_ in doc_preds[1:]:
-            pred = pred & p_
-        rng_df = r.live(r.docs().filter(pred).select("docid")).select(
-            "docid",
-            F.floor(F.col("docid") / F.lit(r.shard_size))
-            .cast("long")
-            .alias("shard"),
-        )
-    # SCORED doc-level clauses (range/exists in must/should): each clause is
-    # (required, boost, predicate); ONE column-pruned docs-store scan
-    # evaluates all predicates and emits kind-tagged (shard, docid) rows
-    sdc: list[tuple[bool, float, object]] = []
+    def spark_doc_sides():
+        """(filter set, kind-tagged scored-clause rows) as Spark frames over
+        the column-pruned docs scan, tombstoned docs dropped."""
+        rng_df = clause_df = None
+        if filters:
+            pred = filters[0].column()
+            for p_ in filters[1:]:
+                pred = pred & p_.column()
+            rng_df = r.live(r.docs().filter(pred).select("docid")).select(
+                "docid",
+                F.floor(F.col("docid") / F.lit(r.shard_size))
+                .cast("long")
+                .alias("shard"),
+            )
+        if sdc:
+            flags = F.array_compact(F.array(*[
+                F.when(p_.column(), F.lit(2 + i)).otherwise(F.lit(None).cast("int"))
+                for i, (_r, _b, p_) in enumerate(sdc)
+            ]))
+            clause_df = r.live(
+                r.docs().select("docid", F.explode(flags).alias("kind"))
+            ).select(
+                "docid",
+                F.col("kind").cast("int").alias("kind"),
+                F.floor(F.col("docid") / F.lit(r.shard_size))
+                .cast("long")
+                .alias("shard"),
+            )
+        return rng_df, clause_df
 
-    def _rng_entry(entry, required: bool):
-        from es_indexer_spark.query.lookup import range_pred
+    # a predicate without a driver form builds its Spark side now, so a bad
+    # field or expression raises whatever the query's terms are
+    spark_sides = None if masks is not None or not doc_preds else spark_doc_sides()
 
-        field, bounds = entry[0], entry[1]
-        boost = float(entry[2]) if len(entry) > 2 else 1.0
-        sdc.append((required, boost, range_pred(field, bounds)))
-
-    for entry in must_ranges:
-        _rng_entry(entry, True)
-    for entry in should_ranges:
-        _rng_entry(entry, False)
-    for entry in must_exists:
-        fld, bst = (entry, 1.0) if isinstance(entry, str) else (entry[0], float(entry[1]))
-        sdc.append((True, bst, F.col(fld).isNotNull()))
-    for entry in should_exists:
-        fld, bst = (entry, 1.0) if isinstance(entry, str) else (entry[0], float(entry[1]))
-        sdc.append((False, bst, F.col(fld).isNotNull()))
-    clause_df = None
-    if sdc:
-        flags = F.array_compact(F.array(*[
-            F.when(pred, F.lit(2 + i)).otherwise(F.lit(None).cast("int"))
-            for i, (_r, _b, pred) in enumerate(sdc)
-        ]))
-        clause_df = r.live(
-            r.docs().select("docid", F.explode(flags).alias("kind"))
-        ).select(
-            "docid",
-            F.col("kind").cast("int").alias("kind"),
-            F.floor(F.col("docid") / F.lit(r.shard_size))
-            .cast("long")
-            .alias("shard"),
-        )
+    def serve_local(postings: int) -> bool:
+        """Driver-local below the posting-volume cutover (query/engine.py):
+        every doc predicate has a driver form, the delete set is a driver
+        array, and the postings plus the docs rows the predicates test stay
+        below ``engine.LOCAL_MAX_POSTINGS``."""
+        if tomb_shards is not None or (doc_preds and masks is None):
+            return False
+        rows = r.docs_footer()[2] if doc_preds else 0
+        return postings + rows < engine.LOCAL_MAX_POSTINGS
 
     extra_t = const_t or mphr_t or sphr_t or sdc
     if not (must_t or should_t or filt_t or phrase_t or not_t or extra_t):
-        if rng_df is None:
+        if not filters:
             return empty_scores(spark)
         # filter(range) with NO term clause at all: constant-score match of
         # the range scan itself — no postings needed. (A must_not alongside
         # the range falls through to the cogroup path so the exclusion
         # applies — it must never be silently dropped.)
+        if serve_local(0):
+            # the allowed docids in docid order, score 0
+            return engine._local_topk(
+                spark, None,
+                lambda _left, rt: pd.DataFrame(
+                    {"docid": np.unique(rt["docid"].to_numpy()), "score": 0.0}
+                ),
+                k, _driver_doc_side(r, filters, masks, tomb),
+            )
+        rng_df, _ = spark_sides or spark_doc_sides()
         out = rng_df.select("docid", F.lit(0.0).alias("score"))
         return out if k is None else out.orderBy(F.asc("docid")).limit(k)
-    if not (must_t or should_t or filt_t or phrase_t or extra_t) and rng_df is None:
+    if not (must_t or should_t or filt_t or phrase_t or extra_t) and not filters:
         # must_not alone: nothing to exclude from (documented empty result)
         return empty_scores(spark)
 
@@ -923,7 +950,7 @@ def bool_query(
     # resolve minimum_should_match: Lucene default is 1 for a pure-should
     # bool, 0 once any required context (must/filter/phrase/range) exists
     has_required = bool(
-        must_groups or filt_t or phrase_t or rng_df is not None
+        must_groups or filt_t or phrase_t or filters
         or m_phr or m_const or any(r for r, _b, _p in sdc)
     )
     n_should_clauses = (
@@ -941,7 +968,7 @@ def bool_query(
     # load postings for every clause's present terms (must_not included — the
     # exclusion set is derived shard-locally from its postings)
     present = sorted(t for t in all_terms if t in found)
-    if not present and rng_df is None and clause_df is None:
+    if not present and not doc_preds:
         return empty_scores(spark)
 
     shard_k = (1 << 62) if k is None else k
@@ -959,30 +986,52 @@ def bool_query(
         should_const=[([t for t in g if t in found], w) for g, w in s_const],
         doc_clauses=[(r, b_) for r, b_, _p in sdc],
     )
-    # cogroup delivery: the range-filter set (kind 0) and — in distributed
-    # tombstone mode — the delete set (kind 1) ride ONE kind-tagged right
-    # side, so stacking both costs the same single cogroup
+    has_rng = bool(filters)
+    distributed = tomb_shards is not None
+    n_sdc = len(sdc)
+
+    def cg_scorer(left: pd.DataFrame, rside: pd.DataFrame) -> pd.DataFrame:
+        kinds = rside["kind"].to_numpy()
+        docs = rside["docid"].to_numpy(dtype=np.int64)
+        # empty-but-present semantics differ by kind: an empty allowed set
+        # means NO doc passes the filter in this shard; an empty delete set
+        # means nothing deleted (live_mask treats it as None). tomb_local
+        # only in distributed mode — in array mode an empty local set must
+        # NOT override the closure array
+        allowed = np.unique(docs[kinds == 0]) if has_rng else None
+        tomb_local = np.unique(docs[kinds == 1]) if distributed else None
+        cl = (
+            {i: np.unique(docs[kinds == 2 + i]) for i in range(n_sdc)}
+            if n_sdc
+            else None
+        )
+        return scorer(left, allowed, tomb_local, cl)
+
+    buckets = sorted({found[t]["bucket"] for t in present})
+    if serve_local(sum(found[t]["df"] for t in present)):
+        # the same scorers per shard, zero Spark jobs; with doc predicates
+        # the driver builds the cogroup's right side and every shard of
+        # either side is scored, exactly the cogroup's grouping
+        cols = _BLOCK_COLUMNS + (("poss",) if scorer.wants_positions else ())
+        blocks = r.local_blocks(present, buckets, cols) if present else None
+        if not doc_preds:
+            return engine._local_topk(spark, blocks, scorer, k)
+        right = _driver_doc_side(r, filters, masks, tomb, [p_ for _r, _b, p_ in sdc])
+        return engine._local_topk(spark, blocks, cg_scorer, k, right)
+    # cogroup delivery: the range-filter set (kind 0), the scored clauses
+    # (kind 2+i) and — in distributed tombstone mode — the delete set (kind
+    # 1) ride ONE kind-tagged right side, so stacking them costs the same
+    # single cogroup
+    rng_df, clause_df = spark_sides or spark_doc_sides()
     right = None
-    has_rng = rng_df is not None
     if has_rng:
         right = rng_df.select("shard", "docid", F.lit(0).alias("kind"))
-    if tomb_shards is not None:
+    if distributed:
         tagged = tomb_shards.select("shard", "docid", F.lit(1).alias("kind"))
         right = tagged if right is None else right.unionByName(tagged)
     if clause_df is not None:
-        # scored doc clauses ride the same kind-tagged right side (kind 2+i)
         tagged = clause_df.select("shard", "docid", "kind")
         right = tagged if right is None else right.unionByName(tagged)
-    buckets = sorted({found[t]["bucket"] for t in present})
-    if right is None and (
-        sum(found[t]["df"] for t in present) < engine.LOCAL_MAX_POSTINGS
-    ):
-        # driver-local below the posting-volume cutover (query/engine.py):
-        # the same scorer per shard, zero Spark jobs
-        cols = _BLOCK_COLUMNS + (("poss",) if scorer.wants_positions else ())
-        return engine._local_topk(
-            spark, r.local_blocks(present, buckets, cols), scorer, k
-        )
     if present:
         blocks = r.blocks(present, buckets)
     else:
@@ -997,26 +1046,6 @@ def bool_query(
             lambda pdf: scorer(pdf), _SCORE_SCHEMA
         )
     else:
-        distributed = tomb_shards is not None
-        n_sdc = len(sdc)
-
-        def cg_scorer(left: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-            kinds = r["kind"].to_numpy()
-            docs = r["docid"].to_numpy(dtype=np.int64)
-            # empty-but-present semantics differ by kind: an empty allowed
-            # set means NO doc passes the filter in this shard; an empty
-            # delete set means nothing deleted (live_mask treats it as None).
-            # tomb_local only in distributed mode — in array mode an empty
-            # local set must NOT override the closure array
-            allowed = np.unique(docs[kinds == 0]) if has_rng else None
-            tomb_local = np.unique(docs[kinds == 1]) if distributed else None
-            cl = (
-                {i: np.unique(docs[kinds == 2 + i]) for i in range(n_sdc)}
-                if n_sdc
-                else None
-            )
-            return scorer(left, allowed, tomb_local, cl)
-
         scored = (
             blocks.groupBy("shard")
             .cogroup(right.groupBy("shard"))

@@ -394,12 +394,17 @@ def function_score_functions(
         dist = F.greatest(F.lit(0.0), raw_dist - F.lit(offset))
         if kind == "gauss":
             sigma2 = -(scale * scale) / (2.0 * math.log(decay))
-            return F.exp(-(dist * dist) / F.lit(2.0 * sigma2))
-        if kind == "exp":
+            v = F.exp(-(dist * dist) / F.lit(2.0 * sigma2))
+        elif kind == "exp":
             lam = math.log(decay) / scale
-            return F.exp(F.lit(lam) * dist)
-        s = scale / (1.0 - decay)
-        return F.greatest(F.lit(0.0), (F.lit(s) - dist) / F.lit(s))
+            v = F.exp(F.lit(lam) * dist)
+        else:
+            s = scale / (1.0 - decay)
+            v = F.greatest(F.lit(0.0), (F.lit(s) - dist) / F.lit(s))
+        # ES scores a decay over a missing field 1.0: the function still
+        # takes part in score_mode (a null would be dropped with the
+        # non-matching filters), before its weight and filter gate apply
+        return F.coalesce(v, F.lit(1.0))
 
     vals: list[Column] = []
     need_fields: set[str] = set()

@@ -236,20 +236,39 @@ _TOPK_COLUMNS = (
 
 
 def _local_topk(
-    spark: SparkSession, blocks: pd.DataFrame | None, scorer, k: int | None
+    spark: SparkSession,
+    blocks: pd.DataFrame | None,
+    scorer,
+    k: int | None,
+    right: pd.DataFrame | None = None,
 ) -> DataFrame:
     """Run a per-shard scorer over driver-read blocks shard by shard (the
     grouping Spark's applyInPandas gives it), merge on (score desc, docid
     asc) and return the top ``k`` (all when None) as a local relation:
-    collecting it launches no Spark job."""
-    docids, scores = [], []
-    if blocks is not None:
-        for _shard, pdf in blocks.groupby("shard", sort=False):
-            out = scorer(pdf)
-            docids.append(out["docid"].to_numpy(dtype=np.int64))
-            scores.append(out["score"].to_numpy(dtype=np.float64))
-    d = np.concatenate(docids) if docids else np.empty(0, np.int64)
-    s = np.concatenate(scores) if scores else np.empty(0, np.float64)
+    collecting it launches no Spark job.
+
+    ``right`` is the driver's copy of a cogroup's right side (rows keyed by
+    ``shard``). With it the scorer takes ``(left, right)`` per shard, for
+    every shard of either side, an absent side as an empty frame: the
+    grouping Spark's cogroup gives it."""
+    left = {} if blocks is None else dict(list(blocks.groupby("shard", sort=False)))
+    if right is None:
+        outs = [scorer(pdf) for pdf in left.values()]
+    else:
+        rg = dict(list(right.groupby("shard", sort=False)))
+        no_left = (pd.DataFrame({"shard": [], "term": []}) if blocks is None
+                   else blocks.iloc[:0])
+        outs = [
+            scorer(left.get(s, no_left), rg.get(s, right.iloc[:0]))
+            for s in sorted(left.keys() | rg.keys())
+        ]
+    d = np.concatenate(
+        [o["docid"].to_numpy(dtype=np.int64) for o in outs] or [np.empty(0, np.int64)]
+    )
+    s = np.concatenate(
+        [o["score"].to_numpy(dtype=np.float64) for o in outs]
+        or [np.empty(0, np.float64)]
+    )
     if d.size == 0:
         return empty_scores(spark)
     order = np.lexsort((d, -s))

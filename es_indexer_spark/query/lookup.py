@@ -125,13 +125,17 @@ def term_query(
 _RANGE_OPS = ("gte", "gt", "lte", "lt")
 
 
+def check_range_bounds(bounds: dict) -> None:
+    """ES ``range`` bounds are a non-empty subset of gte/gt/lte/lt."""
+    if set(bounds) - set(_RANGE_OPS) or not bounds:
+        raise ValueError(f"range bounds must be a non-empty subset of {_RANGE_OPS}")
+
+
 def range_pred(field: str, bounds: dict) -> "F.Column":
     """ES ``range`` bounds (gte/gt/lte/lt, any subset) as one Column
     predicate — a plain comparison conjunction, so parquet min/max row-group
     pruning applies to every bound."""
-    bad = set(bounds) - set(_RANGE_OPS)
-    if bad or not bounds:
-        raise ValueError(f"range bounds must be a non-empty subset of {_RANGE_OPS}")
+    check_range_bounds(bounds)
     c = F.col(field)
     p = None
     for op, v in bounds.items():

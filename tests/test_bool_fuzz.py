@@ -7,8 +7,10 @@ combinations over the sf corpus and checks
    configuration space), and
 2. the JSON DSL body lowering (`search`) == `bool_query` row-for-row —
    the dispatch layer must add no semantics of its own, and
-3. bodies without a cogroup (no range filter) return the same rows on the
-   driver-local path and on the Spark path.
+3. every body, with or without the ``n_chars`` range filter, returns the
+   same rows, scores bit-identical, on the driver-local path and on the
+   Spark path (the integer range has a driver form, so the driver builds
+   the cogroup's filter set itself).
 
 Terms are drawn from real corpus tokens plus guaranteed-absent ones, so
 zero-df clauses, all-filtered frames and msm-overshoot edges all get
@@ -127,13 +129,12 @@ def test_bool_engine_matches_brute_and_dsl(spark, fuzz_index, cfg):
         if rng else None,
     )
     got = [(r["docid"], r["score"]) for r in bool_query(spark, root, **kw).collect()]
-    if rng is None:
-        # no cogroup: served on the driver by default; the Spark path must
-        # return the same rows, scores bit-identical
-        with pytest.MonkeyPatch.context() as mp:
-            mp.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
-            on_spark = bool_query(spark, root, **kw).collect()
-        assert [(r["docid"], r["score"]) for r in on_spark] == got
+    # served on the driver by default; the Spark path must return the same
+    # rows, scores bit-identical
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
+        on_spark = bool_query(spark, root, **kw).collect()
+    assert [(r["docid"], r["score"]) for r in on_spark] == got
     exp = _brute(
         toks, nch, must, [t for t, _ in should], must_not, msm,
         {t: w for t, w in should}, rng, 15,

@@ -119,3 +119,118 @@ def test_driver_reader_matches_spark_scan(spark, local_index):
         for t in ("data", "stream")
     }
     assert driver_read.read_terms(files, ["zzabsent"]) is None
+
+
+# ---- bool bodies with doc-level filters --------------------------------------
+
+
+@pytest.fixture(scope="module")
+def filter_index(spark, documents, tmp_path_factory):
+    """Stored keyword, integer, double and sparse (nullable) fields, and a
+    driver-array delete set that falls inside the filter ranges below."""
+    root = str(tmp_path_factory.mktemp("idx_local_filters"))
+    build_index(
+        spark,
+        documents.withColumn("ratio", F.col("n_chars") / 7.0).withColumn(
+            "opt", F.when(F.col("n_chars") % 3 == 0, F.col("lang"))
+        ),
+        root, content_col="text", id_col="doc_id",
+        meta_cols=("lang", "source", "n_chars", "ratio", "opt"),
+        tokenizer="standard", n_buckets=8, shard_size=100, n_ckpt_batches=2,
+    )
+    return root
+
+
+def _rows(df):
+    return [(r["docid"], r["score"]) for r in df.collect()]
+
+
+def _local_and_spark(spark, root, kw, group):
+    """(rows on the default path, its job count, rows on the Spark path)."""
+    got, n = _jobs(spark, lambda: _rows(bool_query(spark, root, **kw)), group)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(engine, "LOCAL_MAX_POSTINGS", 0)
+        want = _rows(bool_query(spark, root, **kw))
+    if kw.get("k", 10) is None:
+        got, want = sorted(got), sorted(want)
+    return got, n, want
+
+
+LOCAL_BODIES = {
+    "keyword-range": dict(must=["data"], should=["stream", "window"],
+                          must_not=["key"],
+                          filter_range=("lang", {"gte": "e", "lt": "g"})),
+    "int-range": dict(must=["data"], should=["stream"],
+                      filter_range=[("n_chars", {"gte": 200}),
+                                    ("n_chars", {"lt": 450.5})]),
+    "term": dict(should=["spark", "join"], filter_fields=[("lang", "en")]),
+    "terms": dict(should=["data", "stream"],
+                  filter_fields=[("lang", ["en", "fr"]),
+                                 ("source", ["src1", "src3", "zz"])]),
+    "int-terms": dict(should=["data"],
+                      filter_fields=[("n_chars", list(range(0, 600, 3)))]),
+    "exists": dict(must=["data"], filter_exists=["opt"]),
+    "scored": dict(must=["data"],
+                   must_ranges=[("n_chars", {"gte": 300}, 0.5)],
+                   should_exists=[("opt", 2.0)]),
+    "scored-should": dict(should=["window"],
+                          should_ranges=[("n_chars", {"lt": 400}, 1.5)],
+                          should_exists=["opt"], minimum_should_match=1),
+}
+
+
+@pytest.mark.parametrize("name", sorted(LOCAL_BODIES))
+def test_bool_doc_filters_served_locally(spark, filter_index, name):
+    for k in (10, None):
+        kw = dict(LOCAL_BODIES[name], k=k)
+        got, n, want = _local_and_spark(spark, filter_index, kw, f"{name}-{k}")
+        assert got and n == 0, (name, k)
+        assert got == want, (name, k)
+
+
+def test_bool_doc_filter_edges_match_spark(spark, filter_index, tmp_path):
+    rng = ("n_chars", {"gte": 150, "lt": 400})
+    # should-only plus a range: shards with allowed docs but none of the
+    # should postings still return their score-0 docs
+    got, n, want = _local_and_spark(spark, filter_index, dict(
+        should=["customer"], filter_range=rng, k=None), "edge-should")
+    assert n == 0 and got == want
+    assert any(s == 0.0 for _d, s in got) and any(s > 0.0 for _d, s in got)
+    # every term absent: the range alone defines the candidates
+    got, n, want = _local_and_spark(spark, filter_index, dict(
+        should=["zzabsent", "qqmissing"], filter_range=rng, k=None), "edge-absent")
+    assert n == 0 and got == want and got
+    assert all(s == 0.0 for _d, s in got)
+    # range plus must_not, no scoring clause: the exclusion applies
+    got, n, want = _local_and_spark(spark, filter_index, dict(
+        must_not=["data"], filter_range=rng, k=None), "edge-mustnot")
+    assert n == 0 and got == want and got
+    # range only: the allowed docs in docid order, k of them
+    got, n, want = _local_and_spark(spark, filter_index, dict(
+        filter_range=rng, k=7), "edge-range-only")
+    assert n == 0 and got == want and len(got) == 7
+    assert [d for d, _s in got] == sorted(d for d, _s in got)
+
+    # a tombstoned doc inside the range drops out on both paths
+    root = str(tmp_path / "idx")
+    shutil.copytree(filter_index, root)
+    kw = dict(must=["data"], filter_range=rng, k=None)
+    before = _rows(bool_query(spark, root, **kw))
+    gone = before[len(before) // 2][0]
+    delete_docs(spark, root, [gone])
+    got, n, want = _local_and_spark(spark, root, kw, "edge-tomb")
+    assert n == 0 and got == want
+    assert sorted(got) == sorted(r for r in before if r[0] != gone)
+
+
+def test_bool_doc_filters_without_driver_form_stay_on_spark(spark, filter_index):
+    """A double-column range (Spark's NaN order), a wildcard (Java regex)
+    and a script (Catalyst expression) keep the cogroup."""
+    for name, kw in {
+        "double-range": dict(must=["data"], filter_range=("ratio", {"gte": 40.0})),
+        "like": dict(must=["data"], filter_like=[("lang", "e*")]),
+        "script": dict(must=["data"], filter_script=["n_chars % 2 = 0"]),
+    }.items():
+        got, n, want = _local_and_spark(spark, filter_index, kw, f"spark-{name}")
+        assert got and n > 0, name
+        assert got == want, name

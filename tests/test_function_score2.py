@@ -262,3 +262,58 @@ def test_geo_decay_haversine(spark, documents, tmp_path_factory):
         d: s * math.exp(lam * hav(*pts[d])) for d, s in base.items()
     })
     assert got == [(d, pytest.approx(s)) for d, s in want]
+
+
+def test_decay_over_missing_field_scores_one(spark, documents, tmp_path_factory):
+    """ES scores a decay function over a doc's missing field 1.0, so under
+    score_mode sum / avg the function still counts for that doc (a null
+    would drop it like a function whose filter does not match). The weight
+    scales the 1.0, and a filter that does not match still drops it."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path_factory.mktemp("idx_fs_nulldecay"))
+    null_id = (
+        documents.filter(F.lower("text").contains("data"))
+        .agg(F.min("doc_id")).first()[0]
+    )
+    build_index(
+        spark,
+        documents.withColumn(
+            "nc", F.when(F.col("doc_id") == null_id, F.lit(None).cast("long"))
+            .otherwise(F.col("n_chars")),
+        ),
+        root, content_col="text", id_col="doc_id", meta_cols=("lang", "nc"),
+        tokenizer="standard", n_buckets=8, shard_size=100, n_ckpt_batches=2,
+    )
+    base = {
+        r["docid"]: r["score"]
+        for r in bool_query(spark, root, should=[Q], k=None).collect()
+    }
+    docs = {
+        r["docid"]: (r["lang"], r["nc"])
+        for r in spark.read.parquet(catalog.resolve(root) + "/docs")
+        .select("docid", "lang", "nc").collect()
+    }
+    assert [d for d in base if docs[d][1] is None] != []
+    gauss = {"nc": {"origin": 500, "scale": 300}}
+    fns = [
+        {"gauss": gauss, "weight": 3.0},
+        {"gauss": gauss, "filter": {"term": {"lang": "fr"}}},
+        {"filter": {"term": {"lang": "en"}}, "weight": 2.0},
+    ]
+
+    def f_vals(d):
+        lang, nc = docs[d]
+        g = 1.0 if nc is None else _gauss(nc, 500, 300)
+        return [3.0 * g] + ([g] if lang == "fr" else []) + (
+            [2.0] if lang == "en" else [])
+
+    n = len(base)
+    got_sum = _got(spark, root, fns, score_mode="sum", k=n)
+    want = _rank({d: s * sum(f_vals(d)) for d, s in base.items()}, n)
+    assert got_sum == [(d, pytest.approx(s)) for d, s in want]
+    got_avg = _got(spark, root, fns, score_mode="avg", k=n)
+    want = _rank(
+        {d: s * sum(f_vals(d)) / len(f_vals(d)) for d, s in base.items()}, n
+    )
+    assert got_avg == [(d, pytest.approx(s)) for d, s in want]

@@ -282,6 +282,26 @@ def main() -> int:
         ],
     ))
 
+    # 12c. a bool with a keyword range filter and a scored term below the
+    # cutover: the driver evaluates the range over the docs columns it reads
+    # and runs the cogroup scorer itself, so the result is a local relation
+    # with no docs or postings scan, no shuffle and no cogroup
+    p = formatted(bool_query(
+        spark, root, must=["data"], should=["stream"],
+        filter_range=("lang", {"gte": "e", "lt": "g"}), k=10,
+    ))
+    sections.append((
+        "bool_query with a range filter below the posting-volume cutover: "
+        "driver-local LocalTableScan",
+        p,
+        [
+            ("a local relation", "LocalTableScan" in p),
+            ("no shuffle", "Exchange" not in p),
+            ("no cogroup", "FlatMapCoGroupsInPandas" not in p),
+            ("no parquet scan", "Scan parquet" not in p),
+        ],
+    ))
+
     # 13. multi_match: per-field pruned scans UNIONed into ONE shard-grouped
     # Arrow stage — cross-field combination without any join or extra shuffle
     from es_indexer_spark.query.multifield import multi_match
@@ -424,12 +444,13 @@ def main() -> int:
     # cartesian/broadcast of the range side
     from es_indexer_spark.query.boolean import bool_query
 
-    p = formatted(
-        bool_query(
-            spark, root, must=["data"],
-            filter_range=("n_chars", {"gte": 100, "lt": 500}), k=10,
+    with spark_path():
+        p = formatted(
+            bool_query(
+                spark, root, must=["data"],
+                filter_range=("n_chars", {"gte": 100, "lt": 500}), k=10,
+            )
         )
-    )
     sections.append((
         "bool.filter(range): pushed bounds + shard-cogrouped filter set",
         p,
@@ -763,13 +784,14 @@ def main() -> int:
     # block scan, and the same per-shard evaluator (the filter(terms) doc
     # set cogroups in like any doc-level filter — exactly 2 Exchanges:
     # blocks + filter set, never one per clause kind)
-    p = formatted(bool_query(
-        spark, root,
-        must_phrase=["data stream"], must_raw=["customer"],
-        should_wildcard=[("wind*", 0.5)],
-        should_terms=[(["spark", "flink"], 0.5)],
-        filter_fields=[("lang", ["en", "fr"])], k=10,
-    ))
+    with spark_path():
+        p = formatted(bool_query(
+            spark, root,
+            must_phrase=["data stream"], must_raw=["customer"],
+            should_wildcard=[("wind*", 0.5)],
+            should_terms=[(["spark", "flink"], 0.5)],
+            filter_fields=[("lang", ["en", "fr"])], k=10,
+        ))
     sections.append((
         "bool round-5f leaves: scored phrase + raw/const groups + filter(terms), one Arrow stage",
         p,
@@ -792,13 +814,14 @@ def main() -> int:
     # range — the scored clause adds ONE more column-pruned docs scan whose
     # kind-tagged rows UNION into the existing cogroup right side: total
     # shuffles stay at 2 (blocks + unioned doc sets) for any clause count
-    p = formatted(bool_query(
-        spark, root,
-        must=["data"],
-        should_ranges=[("n_chars", {"gte": 400}, 0.5)],
-        must_exists=["lang"],
-        filter_range=("n_chars", {"lt": 100000}), k=10,
-    ))
+    with spark_path():
+        p = formatted(bool_query(
+            spark, root,
+            must=["data"],
+            should_ranges=[("n_chars", {"gte": 400}, 0.5)],
+            must_exists=["lang"],
+            filter_range=("n_chars", {"lt": 100000}), k=10,
+        ))
     sections.append((
         "bool scored range/exists: kind-tagged union rides the same cogroup",
         p,
