@@ -15,7 +15,8 @@ Dataflow (one build, default single-pass mode)::
                   partitioning splits hot buckets so no straggler sort]
     postings = per bucket-batch: filter batch buckets BEFORE the shuffle →
                repartition(bucket, salt) → sortWithinPartitions(bucket, term,
-               docid) → mapInPandas streaming block encoder → write
+               docid) → mapInArrow block encoder (codec.encode_postings:
+               whole-batch numpy, no per-term loop) → write
                postings/batch=K/bucket=B/ parquet            [ckpt per batch]
                (the raw relation — the largest dataset of the build — never
                touches disk; ``materialize_raw=True`` restores the two-stage
@@ -26,8 +27,9 @@ Dataflow (one build, default single-pass mode)::
 
 Scale notes (designed for 1000 executors / 100 TB, tested on local[32]):
 
-- The encoder is *streaming*: it never materializes a whole term's postings. State
-  carried across Arrow batches is at most one partial block (<= block_size rows), so a
+- The encoder cuts and encodes each Arrow batch whole (one varint pass per column,
+  ``reduceat`` aggregates) and never materializes a whole term's postings. State
+  carried across Arrow batches is at most one partial block (< block_size rows), so a
   stop-word term with ~N postings costs O(block_size) memory, not O(N).
 - Blocks are cut at shard boundaries (shard = docid // shard_size), so every block is
   shard-local and the query engine can score shards independently with one narrow
@@ -50,21 +52,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from es_indexer_spark.analysis.tokenizer import get_term_stats_udf
 from es_indexer_spark.index import catalog
-from es_indexer_spark.index.codec import (
-    BLOCK_SIZE,
-    bm25_tf_factor,
-    delta_encode,
-    encode_positions,
-    encode_varints,
-)
+from es_indexer_spark.index.codec import BLOCK_SCHEMA, BLOCK_SIZE, encode_postings
 
 TERM_SALT = 4  # sub-slices per bucket in the raw layout (defuses hot buckets)
-
-BLOCK_SCHEMA = (
-    "bucket int, term string, shard long, block_id int, n int, "
-    "first_docid long, last_docid long, gaps binary, tfs binary, dls binary, "
-    "poss binary, max_tf int, cf long, max_score_free double"
-)
 
 
 def _null_first_key(t: tuple):
@@ -203,176 +193,6 @@ def assign_docids(df: DataFrame, order_cols: Sequence[str], num_partitions: int 
             yield pdf
 
     return ordered.mapInPandas(add_ids, schema=out_schema)
-
-
-def _make_encoder(
-    block_size: int,
-    shard_size: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-    positions: bool = False,
-):
-    """Streaming block encoder for mapInPandas over rows sorted by
-    (bucket, term, docid) within each partition. Carries at most one partial
-    block across Arrow batches; cuts blocks at shard boundaries. When
-    ``positions`` is on, each block also stores the Lucene-.prx-style encoded
-    term positions (codec.encode_positions) for phrase queries."""
-
-    def encode_partition(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend: dict | None = None  # {bucket, term, block_id, d, t, l, p}
-        out_rows: list[tuple] = []
-
-        def block_row(bucket, term, shard, bid, dd, tt, ll, pp):
-            poss = None
-            if positions:
-                flat = (
-                    np.concatenate([np.asarray(x, dtype=np.uint64) for x in pp])
-                    if len(pp)
-                    else np.empty(0, dtype=np.uint64)
-                )
-                poss = encode_positions(flat, tt)
-            return (
-                bucket,
-                term,
-                shard,
-                bid,
-                int(dd.size),
-                int(dd[0]),
-                int(dd[-1]),
-                encode_varints(delta_encode(dd, base=int(dd[0]))),
-                encode_varints(tt),
-                encode_varints(ll),
-                poss,
-                int(tt.max()),
-                int(tt.sum()),  # block cf — lets the dictionary stage aggregate
-                               # block metadata instead of re-reading raw postings
-                float(bm25_tf_factor(tt, ll, avgdl, k1, b).max()),
-            )
-
-        def emit(bucket, term, block_id, d, t, l, p) -> tuple[int, int]:
-            """Encode full blocks (and shard-boundary cuts); returns the number
-            of leading postings consumed (the rest stays pending)."""
-            consumed = 0
-            bid = block_id
-            while True:
-                remaining = d.size - consumed
-                if remaining <= 0:
-                    break
-                first = d[consumed]
-                shard = int(first) // shard_size
-                # end of this shard within the array
-                shard_end = np.searchsorted(d, (shard + 1) * shard_size, side="left")
-                span = min(int(shard_end) - consumed, block_size)
-                if span == remaining and span < block_size and int(shard_end) == d.size:
-                    break  # tail partial block — keep pending (may grow next batch)
-                sl = slice(consumed, consumed + span)
-                out_rows.append(
-                    block_row(bucket, term, shard, bid, d[sl], t[sl], l[sl],
-                              p[sl] if p is not None else ())
-                )
-                bid += 1
-                consumed += span
-            return consumed, bid
-
-        def flush_pending_final():
-            nonlocal pend
-            if pend is None:
-                return
-            d, t, l, p = pend["d"], pend["t"], pend["l"], pend["p"]
-            if d.size:
-                consumed, bid = emit(
-                    pend["bucket"], pend["term"], pend["block_id"], d, t, l, p
-                )
-                # force the tail out too
-                if consumed < d.size:
-                    dd = d[consumed:]
-                    shard = int(dd[0]) // shard_size
-                    out_rows.append(
-                        block_row(
-                            pend["bucket"], pend["term"], shard, bid,
-                            dd, t[consumed:], l[consumed:],
-                            p[consumed:] if p is not None else (),
-                        )
-                    )
-            pend = None
-
-        cols = [
-            "bucket", "term", "shard", "block_id", "n", "first_docid", "last_docid",
-            "gaps", "tfs", "dls", "poss", "max_tf", "cf", "max_score_free",
-        ]
-
-        def force_emit(bucket, term, bid, dd, tt, ll, pp) -> int:
-            """Emit a complete monotone run including its tail partial block."""
-            consumed, bid = emit(bucket, term, bid, dd, tt, ll, pp)
-            if consumed < dd.size:
-                rest = dd[consumed:]
-                shard = int(rest[0]) // shard_size
-                out_rows.append(
-                    block_row(
-                        bucket, term, shard, bid, rest, tt[consumed:], ll[consumed:],
-                        pp[consumed:] if pp is not None else (),
-                    )
-                )
-                bid += 1
-            return bid
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            for (bucket, term), g in pdf.groupby(["bucket", "term"], sort=False):
-                d = g["docid"].to_numpy(np.uint64)
-                t = g["tf"].to_numpy(np.uint64)
-                l = g["doc_len"].to_numpy(np.uint64)
-                p = g["positions"].to_numpy(object) if positions else None
-                bid = 0
-                if pend is not None:
-                    if pend["bucket"] == bucket and pend["term"] == term:
-                        d = np.concatenate([pend["d"], d])
-                        t = np.concatenate([pend["t"], t])
-                        l = np.concatenate([pend["l"], l])
-                        if positions:
-                            p = np.concatenate([pend["p"], p])
-                        bid = pend["block_id"]
-                        pend = None
-                    else:
-                        flush_pending_final()
-                # A term's rows arrive docid-sorted per raw FILE, but a scan
-                # partition may pack several files (salted hot-term slices, or
-                # Spark's small-file packing), so a run can contain descending
-                # seams. delta_encode on a seam would silently wrap (ADVICE r1)
-                # — split the run into strictly-increasing segments and encode
-                # each as its own (correct, possibly fragmented) block sequence;
-                # scoring unions blocks, so results are unaffected.
-                seams = np.where(np.diff(d.astype(np.int64)) <= 0)[0] + 1
-                start = 0
-                for s in seams:
-                    bid = force_emit(
-                        int(bucket), str(term), bid,
-                        d[start:s], t[start:s], l[start:s],
-                        p[start:s] if p is not None else None,
-                    )
-                    start = int(s)
-                d, t, l = d[start:], t[start:], l[start:]
-                p = p[start:] if p is not None else None
-                consumed, bid = emit(int(bucket), str(term), bid, d, t, l, p)
-                pend = {
-                    "bucket": int(bucket),
-                    "term": str(term),
-                    "block_id": bid,
-                    "d": d[consumed:],
-                    "t": t[consumed:],
-                    "l": l[consumed:],
-                    "p": p[consumed:] if p is not None else None,
-                }
-            if out_rows:
-                yield pd.DataFrame(out_rows, columns=cols)
-                out_rows = []
-        flush_pending_final()
-        if out_rows:
-            yield pd.DataFrame(out_rows, columns=cols)
-
-    return encode_partition
 
 
 def build_index(
@@ -786,7 +606,11 @@ def _build_index_inner(
         except OSError:
             pass  # non-local fs: keep the session default
     postings_path = os.path.join(vdir, "postings")
-    encoder = _make_encoder(block_size, shard_size, avgdl, k1, b, store_positions)
+
+    def encoder(batches):
+        return encode_postings(batches, block_size, shard_size, avgdl, k1, b,
+                               store_positions)
+
     batch_parts = max(
         spark.sparkContext.defaultParallelism * 2,
         n_raw_parts // max(1, n_ckpt_batches),
@@ -828,7 +652,7 @@ def _build_index_inner(
                 .drop("_salt")
                 .sortWithinPartitions("bucket", "term", "docid")
             )
-        enc = part.mapInPandas(encoder, schema=BLOCK_SCHEMA)
+        enc = part.mapInArrow(encoder, schema=BLOCK_SCHEMA)
         # metrics observed during the write (lineage evidence per bucket-batch)
         enc_obs = Observation(f"postings_{batch}")
         enc = enc.observe(

@@ -16,8 +16,11 @@ Two execution paths, one result:
 - **driver** (:mod:`~es_indexer_spark.index.driver_write`): below its
   payload and main-postings-bytes cutovers the delta is tokenized and
   encoded, merged and written on the driver with pyarrow — no Spark job;
-- **Spark**: above them, a delta ``build_index`` then ``upsert_batch``
-  with the deletes passed along.
+- **Spark**: above them, a delta ``build_index`` then ``merge_indexes``
+  with the superseded copies and the deletes passed along.
+
+On both paths the delta's documents get dense docids past main's max docid,
+in ascending ``_id`` order; the ``_id`` itself stays in its stored column.
 
 Both tokenize with the index's own ``block_size`` and, for the ``code``
 chain, its ``lang_col`` (recorded in ``stats.json`` by ``build_index``).
@@ -57,11 +60,12 @@ from pyspark.sql import SparkSession, functions as F
 from es_indexer_spark.index import catalog, driver_read, driver_write
 from es_indexer_spark.index.builder import build_index
 from es_indexer_spark.index.codec import BLOCK_SIZE
-from es_indexer_spark.index.merge import upsert_batch
-from es_indexer_spark.index.tombstones import append_to_vdir
+from es_indexer_spark.index.merge import merge_indexes
+from es_indexer_spark.index.tombstones import append_to_vdir, filter_live
 
 _OPS = ("index", "create", "delete", "update")
 _REFERENCE_BATCH_BYTES = 5 << 20  # IndexServiceImpl.getBatchSize
+_RANK = "__bulk_rank"  # the Spark path's delta docid column
 
 
 def parse_bulk_ndjson(lines: Iterable[str]) -> list[dict]:
@@ -226,8 +230,10 @@ def _spark_bulk(
     work_dir: str | None,
 ) -> str | None:
     """The bulk as Spark jobs: a delta ``build_index`` merged by
-    :func:`upsert_batch`, the deletes tombstoned into the merged version
-    (or, with no upserts, appended to the published one)."""
+    :func:`merge_indexes` with the live main copies the upserts supersede
+    (as :func:`~es_indexer_spark.index.merge.upsert_batch` finds
+    them) and the deletes tombstoned into the
+    merged version (or, with no upserts, appended to the published one)."""
     main_docs = spark.read.parquet(os.path.join(main_vdir, "docs"))
     deleted = (
         main_docs.filter(F.col(delete_key).isin(deletes)).select("docid")
@@ -239,13 +245,18 @@ def _spark_bulk(
     cols = [id_col, content_col, *[c for c in meta_cols if c != id_col]]
     if lang_col and lang_col not in cols:
         cols.append(lang_col)  # tokenizer input only, not stored
-    rows = [tuple(d.get(c) for c in cols) for d in upserts]
-    delta_df = spark.createDataFrame(rows, cols)
+    # dense delta docids in external-id order (``upserts`` is id-sorted), as
+    # on the driver path: the merge offsets them past main's max docid
+    rows = [(rank, *(d.get(c) for c in cols)) for rank, d in enumerate(upserts)]
+    delta_df = spark.createDataFrame(rows, [_RANK, *cols])
+    ids = [d[id_col] for d in upserts]
+    clash = filter_live(spark, main_vdir, main_docs.filter(
+        F.col(id_col if keyed else "docid").isin(ids))).select("docid")
     delta_root = work_dir or tempfile.mkdtemp(prefix="bulk_delta_")
     try:
         build_index(
             spark, delta_df, delta_root,
-            content_col=content_col, id_col=id_col, meta_cols=meta_cols,
+            content_col=content_col, id_col=_RANK, meta_cols=meta_cols,
             tokenizer=stats.get("tokenizer", "standard"), lang_col=lang_col,
             k1=stats.get("k1", 1.2), b=stats.get("b", 0.75),
             n_buckets=stats.get("n_buckets", 32),
@@ -254,11 +265,10 @@ def _spark_bulk(
             store_positions=stats.get("positions", False),
             resume=False,
         )
-        return upsert_batch(
+        return merge_indexes(
             spark, index_root, delta_root,
-            key_cols=(id_col,) if keyed else ("docid",),
             publish_meta=_publish_meta(len(upserts), len(deletes)),
-            delete_docids=deleted,
+            tombstone_docids=clash, delete_docids=deleted,
         )
     finally:
         if work_dir is None:

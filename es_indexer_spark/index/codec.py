@@ -23,31 +23,64 @@ iterations regardless of input size.
 
 from __future__ import annotations
 
+from collections.abc import Iterable, Iterator
+
 import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 BLOCK_SIZE = 128
 
+# One row per encoded block: the postings table's layout, as an Arrow schema
+# and as the Spark DDL string of the same columns.
+BLOCK_ARROW = pa.schema([
+    ("bucket", pa.int32()), ("term", pa.string()), ("shard", pa.int64()),
+    ("block_id", pa.int32()), ("n", pa.int32()), ("first_docid", pa.int64()),
+    ("last_docid", pa.int64()), ("gaps", pa.binary()), ("tfs", pa.binary()),
+    ("dls", pa.binary()), ("poss", pa.binary()), ("max_tf", pa.int32()),
+    ("cf", pa.int64()), ("max_score_free", pa.float64()),
+])
+_DDL = {pa.int32(): "int", pa.int64(): "long", pa.string(): "string",
+        pa.binary(): "binary", pa.float64(): "double"}
+BLOCK_SCHEMA = ", ".join(f"{f.name} {_DDL[f.type]}" for f in BLOCK_ARROW)
 
-def encode_varints(values: np.ndarray) -> bytes:
-    """LEB128-style varint encode of a uint64 array, vectorized."""
+
+def _varints(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128 bytes of a uint64 array as one uint8 buffer, and the end offset
+    of each value's bytes in it."""
     a = np.ascontiguousarray(values, dtype=np.uint64)
-    if a.size == 0:
-        return b""
     nbytes = np.ones(a.size, dtype=np.int64)
     v = a >> np.uint64(7)
     while v.any():
         nbytes += (v > 0).astype(np.int64)
         v >>= np.uint64(7)
-    starts = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    out = np.zeros(int(nbytes.sum()), dtype=np.uint8)
-    max_len = int(nbytes.max())
-    for shift in range(max_len):
+    ends = np.cumsum(nbytes)
+    starts = ends - nbytes
+    out = np.zeros(int(ends[-1]) if a.size else 0, dtype=np.uint8)
+    for shift in range(int(nbytes.max()) if a.size else 0):
         mask = nbytes > shift
         idx = starts[mask] + shift
         byte = ((a[mask] >> np.uint64(7 * shift)) & np.uint64(0x7F)).astype(np.uint8)
         cont = ((nbytes[mask] > shift + 1).astype(np.uint8)) << 7
         out[idx] = byte | cont
-    return out.tobytes()
+    return out, ends
+
+
+def encode_varints(values: np.ndarray) -> bytes:
+    """LEB128-style varint encode of a uint64 array, vectorized."""
+    return _varints(values)[0].tobytes()
+
+
+def _varint_column(values: np.ndarray, cuts: np.ndarray) -> pa.Array:
+    """One varint pass over ``values``, cut into one binary value per range
+    ``[cuts[i], cuts[i+1])``. Varints are self-delimiting, so each value is
+    byte-for-byte the :func:`encode_varints` of its range."""
+    buf, ends = _varints(values)
+    offsets = np.concatenate(([0], ends))[cuts].astype(np.int32)
+    return pa.Array.from_buffers(
+        pa.binary(), cuts.size - 1, [None, pa.py_buffer(offsets), pa.py_buffer(buf)]
+    )
 
 
 def decode_varints(buf: bytes) -> np.ndarray:
@@ -68,14 +101,20 @@ def decode_varints(buf: bytes) -> np.ndarray:
     return vals
 
 
-def delta_encode(sorted_vals: np.ndarray, base: int = 0) -> np.ndarray:
-    """Delta-gap an ascending array against ``base`` (gaps[0] = vals[0]-base)."""
+def delta_encode(
+    sorted_vals: np.ndarray, base: int = 0, starts: np.ndarray | None = None
+) -> np.ndarray:
+    """Delta-gap an ascending array against ``base`` (gaps[0] = vals[0]-base).
+    With ``starts``, each run ``[starts[i], starts[i+1])`` is gapped against
+    its own first value instead (0 at every run start)."""
     a = np.ascontiguousarray(sorted_vals, dtype=np.uint64)
     if a.size == 0:
         return a
     out = np.empty_like(a)
     out[0] = a[0] - np.uint64(base)
     np.subtract(a[1:], a[:-1], out=out[1:])
+    if starts is not None:
+        out[starts] = 0
     return out
 
 
@@ -143,6 +182,64 @@ def bm25_tf_factor(
     return bm25(1.0, tfs.astype(np.float64), dls.astype(np.float64), avgdl, k1, b)
 
 
+def encode_block_rows(
+    docids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    starts: np.ndarray,
+    avgdl: float,
+    k1: float,
+    b: float,
+    positions: tuple[np.ndarray, np.ndarray] | None = None,
+) -> dict[str, pa.Array]:
+    """The block kernel: postings rows cut into blocks at the ascending row
+    indices ``starts`` (``starts[0] == 0``; docids strictly ascending within
+    a block) -> the ``n .. max_score_free`` columns of :data:`BLOCK_ARROW`,
+    one value per block.
+
+    Whole-array work: one gap pass and one varint pass per binary column,
+    sliced at the block byte offsets; the aggregates are ``reduceat`` over
+    the rows (max and integer sums are exact, so each block's value is the
+    one a per-block loop computes). ``positions`` = (flat positions, count
+    per posting) stores each block's positions Lucene-.prx style (delta
+    within a posting, absolute at its start — :func:`encode_positions`);
+    None leaves ``poss`` null."""
+    d = np.asarray(docids).astype(np.int64)
+    t = np.asarray(tfs).astype(np.int64)
+    l = np.asarray(dls).astype(np.int64)
+    starts = np.asarray(starts, dtype=np.int64)
+    cuts = np.append(starts, d.size)
+    ends = cuts[1:]
+    cols = {
+        "n": pa.array(ends - starts, pa.int32()),
+        "first_docid": pa.array(d[starts], pa.int64()),
+        "last_docid": pa.array(d[ends - 1], pa.int64()),
+        "gaps": _varint_column(delta_encode(d, starts=starts), cuts),
+        "tfs": _varint_column(t, cuts),
+        "dls": _varint_column(l, cuts),
+        "poss": pa.nulls(starts.size, pa.binary()),
+    }
+    if positions is not None:
+        flat, counts = (np.asarray(x).astype(np.int64) for x in positions)
+        first = np.append(np.cumsum(counts) - counts, flat.size)
+        deltas = flat.copy()
+        deltas[1:] -= flat[:-1]
+        heads = first[:-1][counts > 0]
+        deltas[heads] = flat[heads]
+        cols["poss"] = _varint_column(deltas, first[cuts])
+    if starts.size:
+        factor = bm25_tf_factor(t, l, avgdl, k1, b)
+        max_tf, cf = np.maximum.reduceat(t, starts), np.add.reduceat(t, starts)
+        bound = np.maximum.reduceat(factor, starts)
+    else:
+        max_tf = cf = np.empty(0, np.int64)
+        bound = np.empty(0, np.float64)
+    cols["max_tf"] = pa.array(max_tf, pa.int32())
+    cols["cf"] = pa.array(cf, pa.int64())
+    cols["max_score_free"] = pa.array(bound, pa.float64())
+    return cols
+
+
 def encode_blocks(
     docids: np.ndarray,
     tfs: np.ndarray,
@@ -155,29 +252,143 @@ def encode_blocks(
     """Chunk one term's postings (docids ascending) into encoded blocks.
 
     Returns a list of dicts with keys: block_id, n, first_docid, last_docid,
-    gaps, tfs, dls (bytes), max_tf, max_score_free.
+    gaps, tfs, dls (bytes), max_tf, cf, max_score_free.
     """
-    n = docids.size
-    blocks = []
-    for bi, off in enumerate(range(0, n, block_size)):
-        d = docids[off : off + block_size]
-        t = tfs[off : off + block_size]
-        l = dls[off : off + block_size]
-        first = int(d[0])
-        blocks.append(
-            {
-                "block_id": bi,
-                "n": int(d.size),
-                "first_docid": first,
-                "last_docid": int(d[-1]),
-                "gaps": encode_varints(delta_encode(d, base=first)),
-                "tfs": encode_varints(t),
-                "dls": encode_varints(l),
-                "max_tf": int(t.max()),
-                "max_score_free": float(bm25_tf_factor(t, l, avgdl, k1, b).max()),
-            }
+    starts = np.arange(0, np.asarray(docids).size, block_size)
+    cols = encode_block_rows(docids, tfs, dls, starts, avgdl, k1, b)
+    del cols["poss"]
+    return [{"block_id": i, **r} for i, r in enumerate(pa.table(cols).to_pylist())]
+
+
+def _key_starts(rows: pa.Table) -> np.ndarray:
+    """Row mask: where a new (bucket, term) run starts."""
+    bucket = rows["bucket"].to_numpy()
+    term = rows["term"].combine_chunks()
+    new = np.ones(rows.num_rows, dtype=bool)
+    if rows.num_rows > 1:
+        new[1:] = (bucket[1:] != bucket[:-1]) | pc.not_equal(
+            term.slice(1), term.slice(0, rows.num_rows - 1)
+        ).to_numpy(zero_copy_only=False)
+    return new
+
+
+def _grouped(rows: pa.Table, new_key: np.ndarray) -> pa.Table:
+    """``rows`` with each (bucket, term) key's rows made contiguous: keys in
+    order of first appearance, rows in arrival order within a key. Sorted
+    input (one run per key) passes through as is; an input that packs
+    several sorted files can repeat a key further on."""
+    runs = np.flatnonzero(new_key)
+    keys = pd.MultiIndex.from_arrays([
+        rows["bucket"].to_numpy()[runs],
+        rows["term"].take(pa.array(runs)).to_numpy(),
+    ])
+    codes = keys.factorize()[0]
+    if np.all(np.diff(codes) > 0):
+        return rows
+    per_row = np.repeat(codes, np.diff(np.append(runs, rows.num_rows)))
+    return rows.take(pa.array(np.argsort(per_row, kind="stable")))
+
+
+def _cut(
+    rows: pa.Table, new_key: np.ndarray, block_size: int, shard_size: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Block starts of key-grouped rows, and each block's ordinal within
+    its key. A block starts at a key change, at a docid that does not
+    ascend (a seam between packed sorted slices — encoding across it would
+    wrap the gap), at a shard change, and every ``block_size`` rows from
+    the start of each run between those."""
+    d = rows["docid"].to_numpy()
+    n = d.size
+    new_seg = new_key.copy()
+    new_seg[1:] |= (d[1:] <= d[:-1]) | (d[1:] // shard_size != d[:-1] // shard_size)
+    seg = np.flatnonzero(new_seg)
+    pos = np.arange(n) - np.repeat(seg, np.diff(np.append(seg, n)))
+    starts = np.flatnonzero(pos % block_size == 0)
+    key_first = np.flatnonzero(new_key[starts])
+    ordinal = np.arange(starts.size) - np.repeat(
+        key_first, np.diff(np.append(key_first, starts.size))
+    )
+    return starts, ordinal
+
+
+def encode_postings(
+    batches: Iterable[pa.RecordBatch | pa.Table],
+    block_size: int,
+    shard_size: int,
+    avgdl: float,
+    k1: float,
+    b: float,
+    positions: bool = False,
+) -> Iterator[pa.RecordBatch]:
+    """Encoded blocks (:data:`BLOCK_ARROW`) of posting batches sorted by
+    (bucket, term, docid), columns ``bucket, term, docid, tf, doc_len`` and,
+    with ``positions``, ``positions`` (one ascending list per posting).
+
+    Each batch is cut and encoded whole (:func:`_cut`,
+    :func:`encode_block_rows`). Blocks are shard-local (shard = docid //
+    ``shard_size``) and numbered by their ordinal within the term, carried
+    across seams and batches. The state carried from one batch to the next
+    is the last term's trailing partial block (< ``block_size`` rows) and
+    its block number, so a stop word with ~N postings costs O(block_size)
+    memory, not O(N); the partial block is emitted when its term ends."""
+    open_rows = None  # the last key's partial block (maybe empty rows)
+    open_key, open_id = None, 0
+
+    def blocks(rows, starts, ids):
+        d = rows["docid"].to_numpy()
+        pos = None
+        if positions:
+            lists = rows["positions"].combine_chunks()
+            pos = (lists.flatten().to_numpy(), pc.list_value_length(lists).to_numpy())
+        take = pa.array(starts)
+        cols = {
+            "bucket": rows["bucket"].combine_chunks().take(take),
+            "term": rows["term"].combine_chunks().take(take),
+            "shard": pa.array(d[starts] // shard_size),
+            "block_id": pa.array(ids),
+            **encode_block_rows(d, rows["tf"].to_numpy(), rows["doc_len"].to_numpy(),
+                                starts, avgdl, k1, b, pos),
+        }
+        return pa.RecordBatch.from_arrays(
+            [cols[f.name].cast(f.type) for f in BLOCK_ARROW], schema=BLOCK_ARROW
         )
-    return blocks
+
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        rows = batch if isinstance(batch, pa.Table) else pa.Table.from_batches([batch])
+        rows = _grouped(rows, _key_starts(rows))
+        carry = (rows["bucket"][0].as_py(), rows["term"][0].as_py()) == open_key
+        if carry:  # the batch's first key continues the open block
+            rows = pa.concat_tables([open_rows, rows.select(open_rows.column_names)])
+        elif open_rows is not None and open_rows.num_rows:
+            yield blocks(open_rows, np.zeros(1, np.int64), np.array([open_id]))
+        new_key = _key_starts(rows)
+        starts, ids = _cut(rows, new_key, block_size, shard_size)
+        if carry:
+            key_first = np.flatnonzero(new_key[starts])
+            ids[: key_first[1] if key_first.size > 1 else None] += open_id
+        tail = int(starts[-1])
+        if rows.num_rows - tail == block_size:  # the last block is whole
+            tail, open_id = rows.num_rows, int(ids[-1]) + 1
+            done = starts.size
+        else:
+            open_id, done = int(ids[-1]), starts.size - 1
+        open_key = (rows["bucket"][-1].as_py(), rows["term"][-1].as_py())
+        open_rows = rows.slice(tail)
+        if done:
+            yield blocks(rows.slice(0, tail), starts[:done], ids[:done])
+    if open_rows is not None and open_rows.num_rows:
+        yield blocks(open_rows, np.zeros(1, np.int64), np.array([open_id]))
+
+
+def binary_values(col: pa.Array | pa.ChunkedArray) -> bytes:
+    """The concatenated bytes of a binary column's values."""
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    if len(arr) == 0:
+        return b""
+    offsets = np.frombuffer(arr.buffers()[1], np.int32)[arr.offset : arr.offset + len(arr) + 1]
+    return arr.buffers()[2].to_pybytes()[offsets[0] : offsets[-1]]
 
 
 def decode_block(

@@ -9,7 +9,8 @@ same steps run on the driver with no Spark job:
 - **delta** — the builder's tokenizer chains and ``term_stats_frame``,
   ``hashlib`` sha256, ``bucket = pmod(xxhash64(term), n_buckets)`` through
   :func:`xxhash64` (bit-identical to Spark's, seed 42) and the builder's own
-  streaming block encoder;
+  block encoder (:func:`~es_indexer_spark.index.codec.encode_postings`), at
+  dense docids past main's max docid in ``_id`` order;
 - **merge** — exactly :func:`~es_indexer_spark.index.merge.upsert_batch`:
   the shard-rounded docid offset, the merged avgdl, the safe-bound swap of
   ``max_score_free`` per segment, the additive dictionary, carried
@@ -50,17 +51,18 @@ from es_indexer_spark.analysis.tokenizer import (
     term_stats_frame,
 )
 from es_indexer_spark.index import catalog, driver_read, tombstones
-from es_indexer_spark.index.builder import BLOCK_SCHEMA, _make_encoder
-from es_indexer_spark.index.codec import BLOCK_SIZE, bm25
+from es_indexer_spark.index.codec import BLOCK_ARROW, BLOCK_SIZE, bm25, encode_postings
 
 # Upserted content bytes served on the driver. Measured (4-vCPU VM, local[4],
-# code_files content into a 1,000-file index, whole bulk call): driver
-# 0.37 s at 10 KB, 3.3 s at 250 KB, 10.6 s at 1 MB, 16.2 s at 2 MB; Spark
-# 8.4, 7.4, 10.4 and 12.8 s. The driver cost is the builder's block encoder
-# looping over (term, doc) groups on one core, where Spark runs it on four
-# behind a ~7 s job floor, so the two cross near 1 MB. The cutover sits at
-# half of that, where the driver is still ~2x faster.
-MAX_PAYLOAD_BYTES = 1 << 19
+# code_files content into a 1,000-file index, whole bulk call, warm JVM):
+# driver 0.07 s at 10 KB, 0.11 s at 250 KB, 0.29 s at 1 MB, 0.63 s at 2 MB
+# and 1.2 s at 4 MB; Spark 3.9, 4.5, 5.8, 7.8 and 10.0 s. With the
+# vectorized block encoder the driver is 8-50x faster at every size, so time
+# no longer sets the cutover: driver memory does. The driver's peak RSS grew
+# by ~31 bytes per content byte (0.7 MB at 10 KB, 29 MB at 1 MB, 61 MB at
+# 2 MB, 125 MB at 4 MB: tokens, term stats and the encoder's arrays are held
+# whole). 2 MiB keeps that near the ~75 MB MAX_POSTINGS_BYTES allows.
+MAX_PAYLOAD_BYTES = 1 << 21
 
 # On-disk bytes of the main version's postings rewritten on the driver.
 # Measured on the same VM with a 20-document bulk: the driver bulk takes
@@ -81,7 +83,6 @@ ROW_GROUP_ROWS = 1 << 15
 READ_BATCH_ROWS = 1 << 13
 
 _TOKENIZERS = ("standard", "code")
-_BLOCK_COLS = [f.split()[0] for f in BLOCK_SCHEMA.split(", ")]
 _DICT_ENCODINGS = ("PLAIN_DICTIONARY", "RLE_DICTIONARY")
 
 
@@ -234,7 +235,7 @@ def _safe_bound(max_tf: pa.Array, k1: float, b: float) -> np.ndarray:
 # ---- delta ------------------------------------------------------------------------
 def _delta_postings(
     docids: np.ndarray, texts: list[str], langs: list | None, stats: dict,
-) -> tuple[pd.DataFrame, np.ndarray]:
+) -> tuple[pa.Table, np.ndarray]:
     """Encoded blocks (builder columns, ``bucket`` included) of the delta
     documents at their final ``docids``, and their doc lengths."""
     positions = bool(stats.get("positions", False))
@@ -251,29 +252,28 @@ def _delta_postings(
     terms = list(chain.from_iterable(ts["terms"]))
     n_buckets = int(stats["n_buckets"])
     bucket_of = {t: term_bucket(t, n_buckets) for t in set(terms)}
-    raw = pd.DataFrame({
+    tfs = (np.concatenate(ts["tfs"].tolist()).astype(np.int64)
+           if terms else np.empty(0, np.int64))
+    raw = {
         "bucket": np.fromiter((bucket_of[t] for t in terms), np.int32, len(terms)),
-        "term": pd.Series(terms, dtype=object),
+        "term": pa.array(terms, pa.string()),
         "docid": np.repeat(docids, counts),
-        "tf": (np.concatenate(ts["tfs"].tolist()).astype(np.int64)
-               if terms else np.empty(0, np.int64)),
+        "tf": tfs,
         "doc_len": np.repeat(dls, counts),
-    })
+    }
     if positions:
-        raw["positions"] = list(chain.from_iterable(
-            (fp[st:st + tf] for st, tf in zip(starts, tfs))
-            for starts, tfs, fp in zip(ts["starts"], ts["tfs"], ts["flat_pos"])
-        ))
-    raw = raw.sort_values(["bucket", "term", "docid"], kind="stable")
-    avgdl = float(dls.sum()) / len(dls)
-    encoder = _make_encoder(
-        int(stats.get("block_size", BLOCK_SIZE)), int(stats["shard_size"]),
-        avgdl, stats["k1"], stats["b"], positions,
+        # a document's flat_pos holds its terms' positions in term order
+        raw["positions"] = pa.ListArray.from_arrays(
+            np.append(0, np.cumsum(tfs)).astype(np.int32),
+            pa.array(np.concatenate(ts["flat_pos"].tolist()) if terms
+                     else np.empty(0, np.int32), pa.int32()))
+    raw = pa.table(raw).sort_by([("bucket", "ascending"), ("term", "ascending"),
+                                 ("docid", "ascending")])
+    blocks = encode_postings(
+        [raw], int(stats.get("block_size", BLOCK_SIZE)), int(stats["shard_size"]),
+        float(dls.sum()) / len(dls), stats["k1"], stats["b"], positions,
     )
-    blocks = list(encoder(iter([raw.reset_index(drop=True)])))
-    if not blocks:
-        return pd.DataFrame(columns=_BLOCK_COLS), dls
-    return pd.concat(blocks, ignore_index=True), dls
+    return pa.Table.from_batches(list(blocks), schema=BLOCK_ARROW), dls
 
 
 def _sorted(t: pa.Table) -> pa.Table:
@@ -365,6 +365,9 @@ def bulk_write(
     ids = np.array([int(d[id_col]) for d in upserts], dtype=np.int64)
     max_docid = pc.max(main_docs["docid"]).as_py() or 0
     offset = ((max_docid + shard_size) // shard_size) * shard_size
+    # dense delta docids in external-id order: the max docid grows by the
+    # delta's size plus at most one shard per bulk, whatever the ids are
+    docids = offset + np.argsort(np.argsort(ids))
     texts = [d[content_col] for d in upserts]
     if not all(isinstance(t, str) for t in texts):
         return None
@@ -377,7 +380,7 @@ def bulk_write(
         return None
 
     blocks, dls = _delta_postings(
-        ids + offset, texts,
+        docids, texts,
         [d.get(lang_col) for d in upserts] if lang_col else None, ms,
     )
     n_m, n_d = int(ms["n_docs"]), len(upserts)
@@ -385,7 +388,7 @@ def bulk_write(
     delta_avgdl = float(dls.sum()) / n_d
     merged_avgdl = (ms["avgdl"] * n_m + delta_avgdl * n_d) / merged_n
     delta_docs = pa.table({
-        "docid": pa.array(ids + offset, pa.int64()),
+        "docid": pa.array(docids, pa.int64()),
         "doc_len": pa.array(dls, pa.int64()),
         "sha256": pa.array([hashlib.sha256(t.encode("utf-8")).hexdigest()
                             for t in texts], pa.string()),
@@ -429,35 +432,36 @@ def bulk_write(
     return vdir
 
 
-def _write_dict(mdir: str, vdir: str, blocks: pd.DataFrame) -> None:
+def _write_dict(mdir: str, vdir: str, blocks: pa.Table) -> None:
     """The additive dictionary merge: df and cf sum per term; a term's
     bucket is hash-derived, so both sides agree on it."""
     files = driver_read.data_files(os.path.join(mdir, "dict"))
     main = _read_all(files)
-    g = blocks.groupby("term", sort=False).agg(
-        df=("n", "sum"), cf=("cf", "sum"), bucket=("bucket", "first"))
-    terms = pa.array(g.index.tolist(), pa.string())
+    g = blocks.group_by("term", use_threads=False).aggregate(
+        [("n", "sum"), ("cf", "sum"), ("bucket", "first")])
+    terms = g["term"].combine_chunks()
+    g_df, g_cf = g["n_sum"].to_numpy(), g["cf_sum"].to_numpy()
     pos = pc.index_in(terms, value_set=main["term"].combine_chunks()).to_numpy(zero_copy_only=False)
     hit = ~np.isnan(pos)
     df = main["df"].to_numpy().copy()
     cf = main["cf"].to_numpy().copy()
     at = pos[hit].astype(np.int64)
-    df[at] += g["df"].to_numpy()[hit]
-    cf[at] += g["cf"].to_numpy()[hit]
+    df[at] += g_df[hit]
+    cf[at] += g_cf[hit]
     new = ~hit
     merged = pa.table({
         "term": pa.concat_arrays([main["term"].combine_chunks(), terms.filter(pa.array(new))]),
-        "df": np.concatenate([df, g["df"].to_numpy()[new]]),
-        "cf": np.concatenate([cf, g["cf"].to_numpy()[new]]),
+        "df": np.concatenate([df, g_df[new]]),
+        "cf": np.concatenate([cf, g_cf[new]]),
         "bucket": np.concatenate([main["bucket"].to_numpy(),
-                                  g["bucket"].to_numpy()[new]]),
+                                  g["bucket_first"].to_numpy()[new]]),
     }).select(main.schema.names).cast(main.schema)
     merged = merged.take(pc.sort_indices(merged, sort_keys=[("term", "ascending")]))
     _write_split(merged, os.path.join(vdir, "dict"), 4, files[0])
 
 
 def _write_postings(
-    mdir: str, vdir: str, ms: dict, blocks: pd.DataFrame,
+    mdir: str, vdir: str, ms: dict, blocks: pa.Table,
     merged_avgdl: float, delta_avgdl: float,
 ) -> None:
     """One term-sorted file per bucket under ``postings/batch=0``: the main
@@ -479,12 +483,10 @@ def _write_postings(
 
     main_fix = swap if merged_avgdl > ms["avgdl"] else (lambda t: t)
     if merged_avgdl > delta_avgdl:
-        blocks = blocks.assign(max_score_free=_safe_bound(
-            pa.array(blocks["max_tf"]), k1, b))
+        blocks = swap(blocks)
     delta_by_bucket = {
-        int(bk): pa.Table.from_pandas(g.drop(columns="bucket"), preserve_index=False)
-        .select(schema.names).cast(schema)
-        for bk, g in blocks.groupby("bucket", sort=True)
+        bk: blocks.filter(pc.equal(blocks["bucket"], bk)).select(schema.names).cast(schema)
+        for bk in pc.unique(blocks["bucket"]).to_pylist()
     }
     for bk in sorted(set(by_bucket) | set(delta_by_bucket)):
         streams = [_file_batches(f, schema, main_fix) for f in by_bucket.get(bk, ())]

@@ -56,12 +56,12 @@ from pyspark.sql.observation import Observation
 
 from es_indexer_spark.index import catalog, reader
 from es_indexer_spark.index.codec import (
-    bm25_tf_factor,
-    decode_block,
+    BLOCK_ARROW,
+    BLOCK_SCHEMA,
+    binary_values,
+    decode_blocks_batch,
     decode_positions,
-    delta_encode,
-    encode_positions,
-    encode_varints,
+    encode_block_rows,
 )
 
 def append_to_vdir(
@@ -249,65 +249,48 @@ def filter_live(spark: SparkSession, vdir: str, df: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------- compaction
-def _rewrite_pdf(
-    pdf: pd.DataFrame, tomb: np.ndarray, avgdl: float, k1: float, b: float, positions: bool
-) -> pd.DataFrame:
-    """Decode each block row, drop tombstoned postings (and their positions),
-    re-encode against the post-delete ``avgdl``; fully-deleted blocks
-    disappear."""
-    rows = []
-    for row in pdf.itertuples(index=False):
-        d, t, l = decode_block(row.gaps, row.tfs, row.dls, row.first_docid)
-        d64 = d.astype(np.int64)
-        keep = live_mask(tomb, d64)
-        if keep is None or keep.all():
-            # untouched postings — but max_score_free MUST be recomputed
-            # against the post-delete avgdl: a larger avgdl shrinks the
-            # BM25 length penalty, so the build-time bound would no
-            # longer be an upper bound and block-max pruning would turn
-            # rank-unsafe
-            rows.append(
-                tuple(row)[:-1]
-                + (float(bm25_tf_factor(t, l, avgdl, k1, b).max()),)
-            )
-            continue
-        if not keep.any():
-            continue
-        poss = None
-        if positions:
-            flat = decode_positions(row.poss, t)
-            poss = encode_positions(
-                flat[np.repeat(keep, t.astype(np.int64))], t[keep]
-            )
-        dk, tk, lk = d[keep], t[keep], l[keep]
-        rows.append(
-            (
-                row.bucket,
-                row.term,
-                row.shard,
-                row.block_id,
-                int(dk.size),
-                int(dk[0]),
-                int(dk[-1]),
-                encode_varints(delta_encode(dk, base=int(dk[0]))),
-                encode_varints(tk),
-                encode_varints(lk),
-                poss,
-                int(tk.max()),
-                int(tk.sum()),
-                float(bm25_tf_factor(tk, lk, avgdl, k1, b).max()),
-            )
-        )
-    return pd.DataFrame(rows, columns=list(pdf.columns))
+def _rewrite(
+    blocks: pa.Table, tomb: np.ndarray, avgdl: float, k1: float, b: float,
+    positions: bool,
+) -> pa.Table:
+    """Decode the block rows, drop tombstoned postings (and their
+    positions) and re-encode each block through the block kernel against the
+    post-delete ``avgdl`` — also the untouched blocks: their bytes come back
+    the same, but ``max_score_free`` MUST be recomputed (a larger avgdl
+    shrinks the BM25 length penalty, so the build-time bound would no longer
+    bound and block-max pruning would turn rank-unsafe). Fully-deleted
+    blocks disappear."""
+    if blocks.num_rows == 0:
+        return BLOCK_ARROW.empty_table()
+    ns = blocks["n"].to_numpy()
+    d, t, l, offsets = decode_blocks_batch(
+        [binary_values(blocks["gaps"])], [binary_values(blocks["tfs"])],
+        [binary_values(blocks["dls"])], blocks["first_docid"].to_numpy(), ns)
+    keep = live_mask(tomb, d)
+    if keep is None:
+        keep = np.ones(d.size, dtype=bool)
+    kept = np.add.reduceat(keep, offsets[:-1])
+    live = pa.array(kept > 0)
+    pos = None
+    if positions:
+        flat = decode_positions(binary_values(blocks["poss"]), t)
+        pos = (flat[np.repeat(keep, t.astype(np.int64))], t[keep])
+    starts = (np.cumsum(kept) - kept)[kept > 0]
+    cols = {
+        **{c: blocks[c].filter(live) for c in ("bucket", "term", "shard", "block_id")},
+        **encode_block_rows(d[keep], t[keep], l[keep], starts, avgdl, k1, b, pos),
+    }
+    return pa.table(cols).select(BLOCK_ARROW.names).cast(BLOCK_ARROW)
 
 
 def _rewrite_blocks(tomb: np.ndarray, avgdl: float, k1: float, b: float, positions: bool):
-    """mapInPandas wrapper over :func:`_rewrite_pdf` (array-mode delivery —
-    a narrow pass, no shuffle; the delete set rides the task closure)."""
+    """mapInArrow wrapper over :func:`_rewrite` (array-mode delivery — a
+    narrow pass, no shuffle; the delete set rides the task closure)."""
 
-    def rewrite(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _rewrite_pdf(pdf, tomb, avgdl, k1, b, positions)
+    def rewrite(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield from _rewrite(pa.Table.from_batches([batch]), tomb, avgdl, k1, b,
+                                positions).to_batches()
 
     return rewrite
 
@@ -363,18 +346,13 @@ def compact_index(spark: SparkSession, index_root: str) -> str:
 
     # postings: one Arrow pass over the encoded blocks; re-encoded with the
     # post-delete avgdl so block-max bounds match the new stats
-    blocks = r.postings().drop("batch")
-    from es_indexer_spark.index.builder import BLOCK_SCHEMA
-
-    selected = blocks.select(
-        "bucket", "term", "shard", "block_id", "n", "first_docid", "last_docid",
-        "gaps", "tfs", "dls", "poss", "max_tf", "cf", "max_score_free",
-    )
+    selected = r.postings().select(*BLOCK_ARROW.names)
     if distributed:
 
         def cg(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             local = np.unique(right["docid"].to_numpy(dtype=np.int64))
-            return _rewrite_pdf(left, local, avgdl, k1, b, positions)
+            blocks = pa.Table.from_pandas(left, preserve_index=False)
+            return _rewrite(blocks, local, avgdl, k1, b, positions).to_pandas()
 
         rewritten = (
             selected.groupBy("shard")
@@ -382,7 +360,7 @@ def compact_index(spark: SparkSession, index_root: str) -> str:
             .applyInPandas(cg, BLOCK_SCHEMA)
         )
     else:
-        rewritten = selected.mapInPandas(
+        rewritten = selected.mapInArrow(
             _rewrite_blocks(tomb, avgdl, k1, b, positions), BLOCK_SCHEMA
         )
     rewritten.write.mode("overwrite").partitionBy("bucket").parquet(

@@ -272,6 +272,31 @@ def test_bulk_publishes_deletes_with_upserts(spark, tmp_path, path):
     assert not [f for f in os.listdir(tomb_dir) if f.endswith(".tmp")]
 
 
+def test_bulk_docids_stay_dense(spark, tmp_path):
+    """One-document bulks with external ids near 10^15 (the last two on the
+    Spark path): each delta's docids are main's shard-rounded max docid plus
+    the rank of its ``_id``, so the max docid grows by at most the delta
+    size plus one shard per bulk, and the ``_id`` stays in ``doc_id``."""
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta doc{i}", "en") for i in range(20)],
+        "doc_id long, text string, lang string")
+    root = str(tmp_path / "idx")
+    build_index(spark, docs, root, content_col="text", id_col="doc_id",
+                meta_cols=("doc_id", "lang"), n_buckets=2, shard_size=64,
+                n_ckpt_batches=1, resume=False)
+    bound, ids = 19, [10**15 + 7 * i for i in range(47)]
+    for i, _id in enumerate(ids):
+        _bulk(spark, root, [{"op": "index", "_id": _id,
+                             "doc": {"text": f"gamma doc{i}", "lang": "en"}}],
+              "driver" if i < 45 else "spark")
+        bound += 1 + 64
+    rows = _table(catalog.resolve(root), "docs", ["docid"])
+    assert max(r["docid"] for r in rows) <= bound
+    assert [r["doc_id"] for r in rows[20:]] == ids
+    hits = topk(spark, root, "gamma", k=None).collect()
+    assert sorted(r["docid"] for r in hits) == [r["docid"] for r in rows[20:]]
+
+
 def test_delete_docs_list_is_one_driver_file(spark, tmp_path, documents):
     root = str(tmp_path / "idx")
     build_index(spark, documents.limit(50), root, content_col="text",

@@ -1,8 +1,9 @@
-"""Property-based tests (hypothesis) for the codec and the streaming encoder.
+"""Property-based tests (hypothesis) for the codec and the block encoder.
 
 The reference has no randomized tests (SURVEY.md §5 "NOT present"); these go
 beyond it: random inputs exercise the varint/delta codec across the full uint64
 width and the seam-splitting encoder across arbitrary file-packing fragmentations
+and Arrow batch splits
 — the invariants that, if broken, corrupt the index silently.
 
 Pure-python/numpy properties — no SparkSession needed, so this module is fast.
@@ -13,16 +14,18 @@ from __future__ import annotations
 import numpy as np
 import pytest
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from es_indexer_spark.index.builder import _make_encoder
 from es_indexer_spark.index.codec import (
+    BLOCK_ARROW,
     decode_block,
     decode_positions,
     decode_varints,
     delta_decode,
     delta_encode,
     encode_positions,
+    encode_postings,
     encode_varints,
 )
 
@@ -68,11 +71,23 @@ def test_positions_roundtrip(tfs, rnd):
 
 
 # ---------------------------------------------------------------- encoder
+_POSTING_COLS = ["bucket", "term", "docid", "tf", "doc_len"]
+
+
+def _arrow_postings(rows) -> pa.Table:
+    """(bucket, term, docid, tf, doc_len) tuples as the encoder's Arrow input."""
+    return pa.table(
+        [pa.array(c, t) for c, t in zip(
+            zip(*rows),
+            (pa.int32(), pa.string(), pa.int64(), pa.int64(), pa.int64()))],
+        names=_POSTING_COLS,
+    )
+
+
 def _run_encoder(batches, block_size=16, shard_size=64):
-    """Drive the streaming encoder directly with crafted pandas batches."""
-    enc = _make_encoder(block_size, shard_size, avgdl=10.0, k1=1.2, b=0.75)
-    out = list(enc(iter(batches)))
-    return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
+    """Drive the block encoder directly with crafted Arrow batches."""
+    out = encode_postings(batches, block_size, shard_size, avgdl=10.0, k1=1.2, b=0.75)
+    return pa.Table.from_batches(list(out), schema=BLOCK_ARROW).to_pandas()
 
 
 def _decode_all(blocks: pd.DataFrame) -> dict[tuple, list[tuple]]:
@@ -118,10 +133,10 @@ def test_encoder_tolerates_arbitrary_fragmentation(fragments, n_batches):
             rows.append((0, "t", d, tf, 10))
     if not rows:
         return
-    pdf = pd.DataFrame(rows, columns=["bucket", "term", "docid", "tf", "doc_len"])
+    table = _arrow_postings(rows)
     # split into n_batches arbitrary contiguous Arrow batches
-    splits = np.array_split(np.arange(len(pdf)), n_batches)
-    batches = [pdf.iloc[ix] for ix in splits if len(ix)]
+    splits = np.array_split(np.arange(len(rows)), n_batches)
+    batches = [table.slice(ix[0], len(ix)).to_batches()[0] for ix in splits if len(ix)]
     blocks = _run_encoder(batches)
     expected = sorted((int(r[2]), int(r[3]), int(r[4])) for r in rows)
     got = _decode_all(blocks).get((0, "t"), [])
@@ -155,8 +170,7 @@ def test_encoder_blockmax_bound_holds(postings):
     for d, tf, dl in postings:
         uniq[d] = (tf, dl)
     rows = [(0, "t", d, tf, dl) for d, (tf, dl) in sorted(uniq.items())]
-    pdf = pd.DataFrame(rows, columns=["bucket", "term", "docid", "tf", "doc_len"])
-    blocks = _run_encoder([pdf])
+    blocks = _run_encoder([_arrow_postings(rows)])
     for row in blocks.itertuples(index=False):
         d, t, l = decode_block(row.gaps, row.tfs, row.dls, row.first_docid)
         factors = bm25_tf_factor(

@@ -198,18 +198,59 @@ def main() -> int:
         ],
     ))
 
+    # 9b. build encode stage: the plan of a real single-pass build's postings
+    # write — ONE salted repartition, ONE in-partition (bucket, term, docid)
+    # sort and ONE Arrow stage (the vectorized block encoder), no pandas stage
+    import tempfile
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from es_indexer_spark.index.builder import build_index
+
+    encode_plans = []
+    parquet = DataFrameWriter.parquet
+
+    def capture(self, path, *args, **kwargs):
+        if os.sep + "postings" + os.sep + "batch=" in path:
+            encode_plans.append(formatted(self._df))
+        return parquet(self, path, *args, **kwargs)
+
+    DataFrameWriter.parquet = capture
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            build_index(
+                spark, spark.read.parquet(os.path.join(sf_dir, "documents.parquet")),
+                tmp, content_col="text", id_col="doc_id", n_buckets=4,
+                shard_size=100, n_ckpt_batches=1, resume=False,
+            )
+    finally:
+        DataFrameWriter.parquet = parquet
+    p = encode_plans[0]
+    sections.append((
+        "build_index encode stage (salted shuffle -> sort -> Arrow block encoder)",
+        p,
+        [
+            ("one postings write per checkpoint batch", len(encode_plans) == 1),
+            ("single Arrow encode stage",
+             len(re.findall(r"^\(\d+\) MapInArrow", p, re.M)) == 1),
+            ("no pandas stage", "MapInPandas" not in p),
+            ("single shuffle (the salted repartition)",
+             len(re.findall(r"^\(\d+\) Exchange", p, re.M)) == 1),
+            ("single in-partition sort", len(re.findall(r"^\(\d+\) Sort", p, re.M)) == 1),
+        ],
+    ))
+
     # 10. tombstone compaction: the posting rewrite is ONE shuffle-free Arrow
     # pass over encoded blocks; the docs rewrite anti-joins a BROADCAST
     # tombstone set (never a sort-merge join)
     import numpy as np
 
-    from es_indexer_spark.index.builder import BLOCK_SCHEMA
+    from es_indexer_spark.index.codec import BLOCK_ARROW, BLOCK_SCHEMA
     from es_indexer_spark.index.tombstones import _rewrite_blocks
 
-    blk = spark.read.parquet(os.path.join(vdir, "postings")).drop("batch").select(
-        "bucket", "term", "shard", "block_id", "n", "first_docid", "last_docid",
-        "gaps", "tfs", "dls", "poss", "max_tf", "cf", "max_score_free",
-    ).mapInPandas(
+    blk = spark.read.parquet(os.path.join(vdir, "postings")).select(
+        *BLOCK_ARROW.names
+    ).mapInArrow(
         _rewrite_blocks(np.array([1, 2], dtype=np.int64), 50.0, 1.2, 0.75, True),
         BLOCK_SCHEMA,
     )
@@ -223,7 +264,7 @@ def main() -> int:
         p,
         [
             ("block rewrite is shuffle-free", "Exchange" not in p),
-            ("single Arrow stage", len(re.findall(r"^\(\d+\) MapInPandas", p, re.M)) == 1),
+            ("single Arrow stage", len(re.findall(r"^\(\d+\) MapInArrow", p, re.M)) == 1),
             ("docs anti-join is broadcast", "BroadcastHashJoin" in p2 and "SortMergeJoin" not in p2),
         ],
     ))
